@@ -690,12 +690,9 @@ def run_cc_scaling(n_cores: int) -> dict:
         .persist()
     )
     n_edges = edges.count()
-    # CUTWED_CC_IMPL=fused selects the experimental symmetric-invariant
-    # round (clustering._fused_round) for impl A/Bs on this probe.
-    cc_impl = os.environ.get("CUTWED_CC_IMPL", "star")
 
     def _cc(e):
-        asg, iters = connected_components(e, impl=cc_impl)
+        asg, iters = connected_components(e)
         asg.write.format("noop").mode("overwrite").save()
         return iters
 

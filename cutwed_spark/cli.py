@@ -65,7 +65,6 @@ def cmd_run(args) -> int:
         salt=args.salt,
         num_partitions=args.shuffle_partitions,
         transfer_dtype=args.transfer_dtype,
-        scoring_path=args.scoring_path,
     )
     res = run_pipeline(
         spark, transcripts, cfg, labeled=labeled, checkpoint_dir=args.checkpoint
@@ -264,9 +263,6 @@ def main(argv=None) -> int:
     pr.add_argument("--salt", type=int, default=None)
     pr.add_argument("--transfer-dtype", dest="transfer_dtype", default="double",
                     choices=["double", "float"])
-    pr.add_argument("--scoring-path", dest="scoring_path", default="joined",
-                    choices=["joined", "cogrouped"],
-                    help="cogrouped only wins when pair-degree >> partitions")
     pr.add_argument("--master", default=None)
     pr.add_argument("--shuffle-partitions", dest="shuffle_partitions", type=int,
                     default=None)

@@ -61,61 +61,8 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.where(F.col("u") != F.col("v")).dropDuplicates(["u", "v"])
 
 
-def _fused_round(cur_sym: DataFrame) -> DataFrame:
-    """One large-star + small-star round over a SYMMETRIC edge set,
-    with ONE dedup per round instead of two (round-5 experiment,
-    VERDICT r4 item 5).
-
-    MEASURED NEGATIVE #4 (do not adopt): on the ccscale probe
-    (12M planted-component edges, local[32], interleaved arm pairs)
-    this variant is 1.43-1.50x SLOWER than the production star pair —
-    star 83.4/71.5 s vs fused 119.3/107.5 s best-of-2, identical
-    5-iteration convergence. The exchange it saves is cheaper than
-    what it adds: the round-final dedup runs over 2|E| symmetric rows
-    (vs |E| directed), and skipping the large-star dedup amplifies the
-    small-star join input. Kept reachable (``impl="fused"`` /
-    CUTWED_CC_IMPL=fused on the bench ccscale probe) so the negative
-    stays reproducible; equivalence is pinned by
-    tests/test_clustering.py.
-
-    Input invariant: ``cur_sym`` contains both directions of every
-    edge, distinct. Large-star then needs no union-double (the
-    neighborhood groupBy reads the symmetric set directly), and its
-    output already satisfies u > v (every emitted edge points a
-    strictly-larger neighbor at min(N(u) ∪ {u})), so small-star's
-    orientation step is a no-op and its groupBy-min tolerates the
-    UN-deduped large-star output (min is duplicate-insensitive; the
-    join amplification is bounded within the round). The round's only
-    dedup runs once, on the re-symmetrized output.
-
-    Shuffle ledger per round vs the production pair of stars:
-    3 exchanges (LS groupBy 2|E|, SS groupBy ~|E|, final dedup 2|E|)
-    vs 4 (LS groupBy 2|E|, LS dedup |E|, SS groupBy |E|, SS dedup |E|)
-    — one fewer stage barrier at roughly equal shuffled volume."""
-    m = cur_sym.groupBy("u").agg(
-        F.least(F.min("v"), F.first("u")).alias("mn")
-    )
-    ls = (
-        cur_sym.join(m, "u")
-        .where(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-        .where(F.col("u") != F.col("v"))
-    )
-    m2 = ls.groupBy("u").agg(F.min("v").alias("mn"))
-    ss = (
-        ls.join(m2, "u")
-        .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-        .union(m2.select("u", F.col("mn").alias("v")))
-        .where(F.col("u") != F.col("v"))
-    )
-    return (
-        ss.union(ss.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .dropDuplicates(["u", "v"])
-    )
-
-
 def connected_components(
-    edges: DataFrame, max_iter: int = 25, impl: str = "star"
+    edges: DataFrame, max_iter: int = 25
 ) -> tuple[DataFrame, int]:
     """edges (conv_id_a, conv_id_b) -> (assignments (conv_id, cluster_id),
     n_iterations). cluster_id is the component's minimum conv_id.
@@ -123,29 +70,16 @@ def connected_components(
     Isolated nodes (no edges) are the caller's concern — union the full
     node set with identity assignments afterwards (see
     ``assign_clusters``).
-
-    ``impl``: "star" (production; alternating large/small star) or
-    "fused" (experimental symmetric-invariant round, one dedup per
-    round — see :func:`_fused_round`). Both converge to identical
-    assignments; "fused" exists for the ccscale probe A/B.
     """
     cur = (
         edges.select(F.col("conv_id_a").alias("u"), F.col("conv_id_b").alias("v"))
         .where(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
-    )
-    if impl == "fused":
-        cur = cur.union(
-            cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).dropDuplicates(["u", "v"])
-    cur = cur.localCheckpoint()
-    step = _fused_round if impl == "fused" else (
-        lambda e: _small_star(_large_star(e))
-    )
+    ).localCheckpoint()
     prev_fp = None
     it = 0
     for it in range(1, max_iter + 1):
-        cur = step(cur).localCheckpoint()
+        cur = _small_star(_large_star(cur)).localCheckpoint()
         fp = _edge_fingerprint(cur)
         if fp == prev_fp:
             break

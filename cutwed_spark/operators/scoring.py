@@ -203,9 +203,9 @@ def score_candidates(
     transfer_dtype: str = "double",
 ) -> DataFrame:
     """Candidate pairs -> scored edges (conv_id_a, conv_id_b, n_a, n_b,
-    twed, twed_norm) via per-pair join + mapInArrow — the DEFAULT
-    scoring path (see score_candidates_cogrouped for when the
-    dictionary-encoded variant wins instead).
+    twed, twed_norm, twed_ratio) via per-pair join + mapInArrow. The
+    UDF dictionary-encodes each pair side per batch (:func:`_dedup_side`),
+    so a series shared by several pairs is padded and self-costed once.
 
     ``twed_norm = twed / (n_a + n_b)`` is the length-normalized score the
     thresholding stage uses (raw TWED grows with series length).
@@ -227,183 +227,6 @@ def score_candidates(
     # requirement, cuTWED/cuTWED.py:167-175, recovered as an optimization).
     joined = joined.sortWithinPartitions(F.greatest(F.size("ta"), F.size("tb")))
     return joined.mapInArrow(make_score_fn(dim, nu, lamb, degree), SCORE_SCHEMA)
-
-
-def make_cogroup_score_fn(dim: int, nu: float, lamb: float, degree: int):
-    """(pairs_pdf, series_pdf) -> scored pandas frame, for cogrouped
-    applyInPandas. The series frame holds each conversation ONCE; pairs
-    reference them by id — the gather happens via twed_pairs' index
-    arrays, exactly like the reference scoring one device-resident batch
-    against index pairs (/root/reference/src/cuTWED_core.h:583-620)."""
-
-    def fn(pairs_pdf: pd.DataFrame, series_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [
-            "conv_id_a", "conv_id_b", "n_a", "n_b",
-            "twed", "twed_norm", "twed_ratio",
-        ]
-        if len(pairs_pdf) == 0 or len(series_pdf) == 0:
-            return pd.DataFrame({c: [] for c in cols})
-        ids = series_pdf["conv_id"].to_numpy()
-        pos = pd.Series(np.arange(len(ids)), index=ids)
-        lens = series_pdf["times"].map(len).to_numpy(np.int64)
-        N = len(ids)
-        n_max = int(lens.max())
-        total = int(lens.sum())
-        flat_v = np.concatenate(series_pdf["values_flat"].to_list()).reshape(
-            total, dim
-        )
-        flat_t = np.concatenate(series_pdf["times"].to_list())
-        V = np.zeros((N, n_max, dim), dtype=np.float64)
-        T = np.zeros((N, n_max), dtype=np.float64)
-        starts = np.zeros(N, dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        rows = np.repeat(np.arange(N, dtype=np.int64), lens)
-        colix = np.arange(total, dtype=np.int64) - np.repeat(starts, lens)
-        V[rows, colix] = flat_v
-        T[rows, colix] = flat_t
-        ia = pos[pairs_pdf["conv_id_a"].to_numpy()].to_numpy(np.int64)
-        ib = pos[pairs_pdf["conv_id_b"].to_numpy()].to_numpy(np.int64)
-        d = twed_pairs(V, T, lens, ia, V, T, lens, ib, nu, lamb, degree)
-        la, lb = lens[ia], lens[ib]
-        self_cost = _self_delete_cost(V, T, lens, nu, lamb, degree)
-        return pd.DataFrame(
-            {
-                "conv_id_a": pairs_pdf["conv_id_a"].to_numpy(),
-                "conv_id_b": pairs_pdf["conv_id_b"].to_numpy(),
-                "n_a": la.astype(np.int32),
-                "n_b": lb.astype(np.int32),
-                "twed": d,
-                "twed_norm": d / np.maximum(la + lb, 1),
-                "twed_ratio": d / np.maximum(self_cost[ia] + self_cost[ib], 1e-12),
-            }
-        )
-
-    return fn
-
-
-def make_cogroup_score_arrow_fn(dim: int, nu: float, lamb: float, degree: int):
-    """(pairs_tbl, series_tbl) -> scored pa.Table, for cogrouped
-    applyInArrow (no pandas materialization)."""
-
-    def fn(pairs_tbl: pa.Table, series_tbl: pa.Table) -> pa.Table:
-        if pairs_tbl.num_rows == 0 or series_tbl.num_rows == 0:
-            return pa.table(
-                {
-                    "conv_id_a": pa.array([], pa.string()),
-                    "conv_id_b": pa.array([], pa.string()),
-                    "n_a": pa.array([], pa.int32()),
-                    "n_b": pa.array([], pa.int32()),
-                    "twed": pa.array([], pa.float64()),
-                    "twed_norm": pa.array([], pa.float64()),
-                    "twed_ratio": pa.array([], pa.float64()),
-                }
-            )
-        series_tbl = series_tbl.combine_chunks()
-        vcol = series_tbl.column("values_flat").chunk(0)
-        tcol = series_tbl.column("times").chunk(0)
-        lens = pc.list_value_length(tcol).to_numpy().astype(np.int64)
-        N = len(lens)
-        total = int(lens.sum())
-        n_max = int(lens.max())
-        flat_v = np.asarray(vcol.flatten(), dtype=np.float64).reshape(total, dim)
-        flat_t = np.asarray(tcol.flatten(), dtype=np.float64)
-        V = np.zeros((N, n_max, dim), dtype=np.float64)
-        T = np.zeros((N, n_max), dtype=np.float64)
-        starts = np.zeros(N, dtype=np.int64)
-        np.cumsum(lens[:-1], out=starts[1:])
-        rows = np.repeat(np.arange(N, dtype=np.int64), lens)
-        colix = np.arange(total, dtype=np.int64) - np.repeat(starts, lens)
-        V[rows, colix] = flat_v
-        T[rows, colix] = flat_t
-        ids = series_tbl.column("conv_id").to_pandas()
-        pos = pd.Series(np.arange(N), index=ids.to_numpy())
-        pa_ids_a = pairs_tbl.column("conv_id_a").to_pandas().to_numpy()
-        pa_ids_b = pairs_tbl.column("conv_id_b").to_pandas().to_numpy()
-        ia = pos[pa_ids_a].to_numpy(np.int64)
-        ib = pos[pa_ids_b].to_numpy(np.int64)
-        d = twed_pairs(V, T, lens, ia, V, T, lens, ib, nu, lamb, degree)
-        la, lb = lens[ia], lens[ib]
-        self_cost = _self_delete_cost(V, T, lens, nu, lamb, degree)
-        return pa.table(
-            {
-                "conv_id_a": pa.array(pa_ids_a, pa.string()),
-                "conv_id_b": pa.array(pa_ids_b, pa.string()),
-                "n_a": pa.array(la.astype(np.int32)),
-                "n_b": pa.array(lb.astype(np.int32)),
-                "twed": pa.array(d),
-                "twed_norm": pa.array(d / np.maximum(la + lb, 1)),
-                "twed_ratio": pa.array(
-                    d / np.maximum(self_cost[ia] + self_cost[ib], 1e-12)
-                ),
-            },
-        )
-
-    return fn
-
-
-def score_candidates_cogrouped(
-    pairs: DataFrame,
-    series: DataFrame,
-    dim: int,
-    nu: float = 1.0,
-    lamb: float = 1.0,
-    degree: int = 2,
-    num_partitions: int | None = None,
-    time_scale: float = 1.0,
-    transfer_dtype: str = "double",
-    use_arrow: bool = True,
-) -> DataFrame:
-    """Dictionary-encoded scoring: partition pairs by a hash bucket,
-    ship each partition the DISTINCT series it needs (once, not once
-    per pair), cogroup, score.
-
-    The transfer analog of the reference copying the series batch to
-    the device once and sweeping all pairs against it
-    (/root/reference/src/cuTWED_core.h:583-620). NOT the default: a
-    series lands in ~min(pair_degree, n_partitions) partitions either
-    way, so the volume saving only materializes when pair-degree >>
-    shuffle partitions (hot-conversation skew), while this path always
-    pays the needed-series dedup, an extra series shuffle, and
-    full-group materialization — measured ~6x slower than
-    score_candidates at the 100k bench corpus (degree ~5). Use it as
-    the escape hatch for high-degree corpora.
-    """
-    spark = pairs.sparkSession
-    n_part = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    keyed = pairs.select(
-        F.pmod(F.xxhash64("conv_id_a", "conv_id_b"), F.lit(n_part))
-        .cast("int")
-        .alias("part"),
-        "conv_id_a",
-        "conv_id_b",
-    )
-    # distinct (partition, conv) pairs; renamed key avoids Spark's
-    # ambiguous-self-join check when cogrouping against `keyed`
-    needed = (
-        keyed.select(F.col("part").alias("p"), F.col("conv_id_a").alias("conv_id"))
-        .unionAll(
-            keyed.select(F.col("part").alias("p"), F.col("conv_id_b").alias("conv_id"))
-        )
-        .dropDuplicates(["p", "conv_id"])
-    )
-    v = F.col("values_flat")
-    if transfer_dtype == "float":
-        v = v.cast("array<float>")
-    t = F.col("times")
-    if time_scale != 1.0:
-        t = F.transform(t, lambda x: x * F.lit(float(time_scale)))
-    slim = series.select("conv_id", v.alias("values_flat"), t.alias("times"))
-    part_series = needed.join(slim, "conv_id").select(
-        "p", "conv_id", "values_flat", "times"
-    )
-    cg = keyed.groupBy("part").cogroup(part_series.groupBy("p"))
-    if use_arrow:
-        return cg.applyInArrow(
-            make_cogroup_score_arrow_fn(dim, nu, lamb, degree), SCORE_SCHEMA
-        )
-    return cg.applyInPandas(make_cogroup_score_fn(dim, nu, lamb, degree), SCORE_SCHEMA)
 
 
 def twed_scalar_udf(dim: int, nu: float, lamb: float, degree: int = 2):

@@ -1,7 +1,7 @@
 """End-to-end entity-resolution pipeline:
 
 transcripts -> assemble -> featurize -> block (MinHash/LSH + tool-sig)
--> candidate pairs -> salted batched TWED scoring (mapInArrow)
+-> candidate pairs -> batched TWED scoring (mapInArrow)
 -> threshold -> match edges -> large-star/small-star clustering
 -> clusters + per-stage metrics, resumable from a score checkpoint.
 
@@ -29,10 +29,7 @@ from cutwed_spark.operators.assemble import assemble_with_signatures, assembly_s
 from cutwed_spark.operators.blocking import build_candidate_pairs_from_state
 from cutwed_spark.operators.clustering import assign_clusters
 from cutwed_spark.operators.featurize import feature_dim
-from cutwed_spark.operators.scoring import (
-    score_candidates,
-    score_candidates_cogrouped,
-)
+from cutwed_spark.operators.scoring import score_candidates
 
 
 @dataclass
@@ -72,16 +69,6 @@ class PipelineConfig:
     salt: int | None = None
     num_partitions: int | None = None
     transfer_dtype: str = "double"  # 'float' halves Arrow bytes (twedf twin)
-    # 'joined' (default): per-pair join + mapInArrow. The 'cogrouped'
-    # variant ships each series once per partition instead of once per
-    # pair, but that only wins when pair-degree >> shuffle partitions
-    # (a series lands in ~min(degree, n_partitions) partitions either
-    # way); measured head-to-head at the 100k bench corpus
-    # (degree ~5, 64 partitions): joined ~3.5 s vs cogrouped ~20 s
-    # steady-state — cogrouped's needed-series dedup + extra shuffle +
-    # full-group materialization dominate. Use 'cogrouped' as the
-    # escape hatch for hot-conversation corpora (degree >> partitions).
-    scoring_path: str = "joined"
 
     @property
     def dim(self) -> int:
@@ -251,45 +238,18 @@ def run_pipeline(
             )
 
     with stage("score"):
-        if cfg.scoring_path not in ("joined", "cogrouped"):
-            raise ValueError(
-                f"unknown scoring_path {cfg.scoring_path!r}; "
-                f"expected 'joined' or 'cogrouped'"
-            )
-        if cfg.scoring_path == "cogrouped":
-            if cfg.salt:
-                # refuse rather than silently drop the user's skew
-                # mitigation: the cogrouped path buckets pairs itself
-                # and has no salted-repartition stage.
-                raise ValueError(
-                    "salt is only honored by scoring_path='joined' "
-                    "(the cogrouped path buckets pairs itself); drop "
-                    "salt or use the joined path"
-                )
-            scored_new = score_candidates_cogrouped(
-                pairs,
-                series,
-                dim=cfg.dim,
-                nu=cfg.nu,
-                lamb=cfg.lamb,
-                degree=cfg.degree,
-                num_partitions=cfg.num_partitions,
-                time_scale=cfg.time_scale,
-                transfer_dtype=cfg.transfer_dtype,
-            )
-        else:
-            scored_new = score_candidates(
-                pairs,
-                series,
-                dim=cfg.dim,
-                nu=cfg.nu,
-                lamb=cfg.lamb,
-                degree=cfg.degree,
-                num_partitions=cfg.num_partitions,
-                salt=cfg.salt,
-                time_scale=cfg.time_scale,
-                transfer_dtype=cfg.transfer_dtype,
-            )
+        scored_new = score_candidates(
+            pairs,
+            series,
+            dim=cfg.dim,
+            nu=cfg.nu,
+            lamb=cfg.lamb,
+            degree=cfg.degree,
+            num_partitions=cfg.num_partitions,
+            salt=cfg.salt,
+            time_scale=cfg.time_scale,
+            transfer_dtype=cfg.transfer_dtype,
+        )
         if ckpt:
             scored_new.write.mode("append").parquet(ckpt)
             scored = spark.read.parquet(ckpt).dropDuplicates(

@@ -37,8 +37,6 @@ honored like the reference's twed/twedf dispatch, ``cuTWED/cuTWED.py:68-81``).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 
 __all__ = [
@@ -454,7 +452,7 @@ def _sweep_chunk_streaming(A, TA, LA, B, TB, LB, nu, lamb, degree, deg):
 # chunks: ~300k pairs/s on the same host; 8->32-worker scaling
 # efficiency 0.2 -> 0.83+). The Arrow batch size upstream is the outer
 # knob (SURVEY.md §4 optimization #4).
-_CHUNK_CELLS = int(os.environ.get("CUTWED_CHUNK_CELLS", 256 * 1024))
+_CHUNK_CELLS = 256 * 1024
 # Above this DP-plane size, stream costs per-diagonal instead.
 _STREAM_PLANE = 64 * 1024 * 1024
 # The reference's compiled point-dimension cap (src/cuTWED.cu:38) —

@@ -52,14 +52,12 @@ def test_empty_edges(spark):
     assert got == {"a": "a", "b": "b"}
 
 
-def test_fused_impl_matches_star(spark):
-    """The experimental symmetric-invariant round (a round-5 measured
-    NEGATIVE, kept reachable for the ccscale probe) must stay
-    assignment-identical to the production star pair on a mixed graph
-    of chains, random components, and a clique."""
+def test_mixed_graph_matches_union_find(spark):
+    """connected_components on a mixed graph of chains, random
+    components (with self-loops), and a 5-clique equals a driver-side
+    union-find: every node maps to its component's minimum id, and a
+    node whose only edges are self-loops is absent."""
     import random
-
-    from cutwed_spark.operators.clustering import connected_components
 
     random.seed(7)
     rows = []
@@ -71,9 +69,26 @@ def test_fused_impl_matches_star(spark):
         ids = [f"b{c:03d}_{i:02d}" for i in range(random.randint(2, 12))]
         rows += [(i, random.choice(ids)) for i in ids]
     rows += [(f"q_{i}", f"q_{j}") for i in range(5) for j in range(5)]
+
+    parent: dict[str, str] = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    expected = {n: find(n) for n in parent}
+
     df = spark.createDataFrame(rows, "conv_id_a string, conv_id_b string")
-    a_star, _ = connected_components(df)
-    a_fused, _ = connected_components(df, impl="fused")
-    m_star = {r["conv_id"]: r["cluster_id"] for r in a_star.collect()}
-    m_fused = {r["conv_id"]: r["cluster_id"] for r in a_fused.collect()}
-    assert m_fused == m_star
+    out, _ = connected_components(df)
+    got = {r["conv_id"]: r["cluster_id"] for r in out.collect()}
+    assert got == expected

@@ -210,27 +210,25 @@ def test_salted_scoring_is_correctness_neutral(spark, corpus):
         assert abs(v - salted[k]) <= 1e-12 * max(1.0, abs(v)), k
 
 
-def test_cogrouped_scoring_matches_join_path(spark, corpus):
-    """score_candidates_cogrouped (dictionary-encoded transfer) computes
-    the same edges as the per-pair-join path."""
-    from cutwed_spark.operators.scoring import score_candidates_cogrouped
+@pytest.mark.parametrize("num_partitions", [3, 8, 29])
+def test_partition_count_invariance(spark, corpus, result, num_partitions):
+    """Metamorphic: the input partition count changes no output — the
+    same scored pairs (twed to 1e-12 relative), edges and clusters as
+    the default-partitioned run."""
+    trdf, labdf, _, _ = corpus
+    res = run_pipeline(
+        spark, trdf, PipelineConfig(num_partitions=num_partitions), labeled=labdf
+    )
 
-    trdf, _, _, _ = corpus
-    cfg = PipelineConfig()
-    series = with_signatures(trdf, assemble_series(trdf, cfg.n_buckets, cfg.max_turns))
-    pairs, _ = build_candidate_pairs_from_state(series)
-    a = {
-        (r["conv_id_a"], r["conv_id_b"]): r["twed"]
-        for r in score_candidates(
-            pairs, series, dim=cfg.dim, nu=cfg.nu, lamb=cfg.lamb
-        ).collect()
+    def pairs(df):
+        return {(r["conv_id_a"], r["conv_id_b"]): r["twed"] for r in df.collect()}
+
+    base, got = pairs(result.scored), pairs(res.scored)
+    assert set(got) == set(base)
+    for k, v in base.items():
+        assert abs(got[k] - v) <= 1e-12 * max(1.0, abs(v)), k
+    assert set(pairs(res.edges)) == set(pairs(result.edges))
+    assert {tuple(r) for r in res.clusters.collect()} == {
+        tuple(r) for r in result.clusters.collect()
     }
-    b = {
-        (r["conv_id_a"], r["conv_id_b"]): r["twed"]
-        for r in score_candidates_cogrouped(
-            pairs, series, dim=cfg.dim, nu=cfg.nu, lamb=cfg.lamb
-        ).collect()
-    }
-    assert set(a) == set(b)
-    for k in a:
-        assert abs(a[k] - b[k]) <= 1e-9 * max(1.0, abs(a[k])), k
+    res.unpersist()
