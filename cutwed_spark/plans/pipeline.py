@@ -169,6 +169,12 @@ def run_pipeline(
     cfg = cfg or PipelineConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
     metrics: dict = {"run_id": run_id, "stages": {}}
+    # Janino compiles of generated classes over the run. The counter is
+    # JVM-wide: runs sharing one JVM concurrently count each other's.
+    compilations = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
+    compiles0 = compilations.getCount()
 
     def stage(name):
         class _T:
@@ -290,6 +296,8 @@ def run_pipeline(
         with stage("evaluate"):
             evaluation = evaluate_pairs(edges, labeled)
             metrics["evaluation"] = evaluation
+
+    metrics["codegen_compiles"] = compilations.getCount() - compiles0
 
     if checkpoint_dir:
         os.makedirs(checkpoint_dir, exist_ok=True)

@@ -35,6 +35,22 @@ def test_pipeline_f1(result):
     assert result.evaluation["f1"] >= 0.99, result.evaluation
 
 
+def test_warm_run_reuses_generated_code(spark, corpus, result):
+    """A second run_pipeline in the same session must hit the codegen
+    cache: one run generates ~180 classes, so a cache smaller than one
+    run evicts them all and every warm run recompiles everything."""
+    trdf, labdf, _, _ = corpus
+    compilations = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    )
+    before = compilations.getCount()
+    res = run_pipeline(spark, trdf, PipelineConfig(), labeled=labdf)
+    compiled = compilations.getCount() - before
+    assert compiled <= 10, compiled
+    assert res.metrics["codegen_compiles"] == compiled
+    assert res.metrics["n_clusters"] == result.metrics["n_clusters"]
+
+
 def test_blocking_recall(spark, corpus):
     """Every (or nearly every) labeled positive must surface as a
     candidate pair — blocking recall bounds pipeline recall."""
