@@ -22,37 +22,6 @@ from pyspark.sql import functions as F
 from cutwed_spark.operators.featurize import DEFAULT_BUCKETS, with_turn_features
 
 
-def assemble_series(
-    transcripts: DataFrame,
-    n_buckets: int = DEFAULT_BUCKETS,
-    max_turns: int | None = 512,
-    bucket_scale: float = 1.0,
-    role_scale: float = 3.0,
-) -> DataFrame:
-    """-> conv_id, n_turns, values, times, text_hashes, tool_sig, n_truncated.
-
-    * ``times`` are made conversation-relative (t - t_first) so absolute
-      epoch offsets never enter the DP (float64 precision at 2025 epochs
-      would eat ~6 significant digits otherwise).
-    * ``max_turns`` caps DP cost (O(nA*nB) per pair); truncation is
-      SURFACED in ``n_truncated`` — no silent truncation
-      (SURVEY.md §7 hard part 3).
-    * ``tool_sig`` is the exact tool-sequence signature used as a
-      blocking axis (north_star: "tool-sequence signatures").
-    """
-    feat = with_turn_features(
-        transcripts, n_buckets, bucket_scale=bucket_scale, role_scale=role_scale
-    )
-    collected = feat.groupBy("conv_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("turn_idx", "feat", "t", "text_hash", "tool"))
-        ).alias("turns"),
-        F.count(F.lit(1)).alias("n_turns_raw"),
-    )
-    staged = _stage_turns(collected, max_turns)
-    return staged.select("conv_id", *_series_columns())
-
-
 def _stage_turns(collected: DataFrame, max_turns: int | None, keep=()) -> DataFrame:
     """Materialize the (possibly slice-capped) sorted turn array and
     its first timestamp as their OWN aliased projections before the
@@ -79,8 +48,7 @@ def _stage_turns(collected: DataFrame, max_turns: int | None, keep=()) -> DataFr
 
 def _series_columns() -> list:
     """Projection from the staged (_turns, _t0, n_turns_raw) columns to
-    the series columns (shared by assemble_series and
-    assemble_with_signatures; stage with ``_stage_turns`` first)."""
+    the series columns (stage with ``_stage_turns`` first)."""
     turns = F.col("_turns")
     t0 = F.col("_t0")
     return [
@@ -118,31 +86,38 @@ def assemble_with_signatures(
     word_num_hashes: int = 8,
     short_conv_turns: int = 8,
 ) -> DataFrame:
-    """assemble_series + blocking signatures (``sig``, ``wsig``) in ONE
-    aggregation tree: single transcripts scan, single shuffle, zero
-    joins — the full conversation STATE table.
+    """-> the conversation STATE table (conv_id, n_turns, n_truncated,
+    values_flat, times, text_hashes, tool_sig) plus the blocking
+    signatures ``sig`` (k-gram minhash) and ``wsig`` (word minhash) in
+    ONE aggregation tree: single transcripts scan, single shuffle, zero
+    joins.
 
-    The separate-tree formulation (assemble_series + with_signatures)
-    scanned the transcripts three times (featurize, k-gram minhash,
-    word minhash) and paid two state-sized joins; folding the per-turn
-    member mins into the same projection as featurization and
-    aggregating them alongside collect_list collapses all of that into
-    the one groupBy the assembly already needs. Measured ~2x on the
-    assemble stage at the 100k-conversation bench corpus.
+    * ``times`` are made conversation-relative (t - t_first) so absolute
+      epoch offsets never enter the DP (float64 precision at 2025 epochs
+      would eat ~6 significant digits otherwise).
+    * ``max_turns`` caps DP cost (O(nA*nB) per pair); truncation is
+      SURFACED in ``n_truncated`` — no silent truncation
+      (SURVEY.md §7 hard part 3).
+    * ``tool_sig`` is the exact tool-sequence signature used as a
+      blocking axis (north_star: "tool-sequence signatures").
+    * ``wsig`` is kept only for short conversations (< short_conv_turns):
+      word vocabularies collide heavily across same-domain
+      conversations, so the word axis is a recall aid for conversations
+      whose k-gram shingle sets are too small to survive banding.
 
-    Signature family: SIGNATURE_FAMILY_VERSION (blocking.py) — word
-    hashes are shared between featurization-adjacent columns and both
-    minhash axes; the word-level signature aggregates for every
-    conversation but is kept only for short ones (see with_signatures).
+    Signature family: SIGNATURE_FAMILY_VERSION (blocking.py); each word
+    is hashed once per turn and feeds both minhash axes.
 
-    Measured negative result (round 4): deriving featurize's word-
-    bucket ids from the materialized ``wh`` array (pmod(wh, n) — one
-    split+lower+xxhash64 tree per turn instead of two) measures
+    Measured negative results: (1) the two-tree formulation (series
+    assembly, plus a separate signature aggregation joined onto it)
+    scanned the transcripts three times and paid two state-sized joins
+    — ~2x slower on the assemble stage at the 100k-conversation bench
+    corpus; its code is deleted. (2) Deriving featurize's word-bucket
+    ids from the materialized ``wh`` array (pmod(wh, n)) measures
     IDENTICAL (28.8 vs 28.9 s best-of-3 interleaved, 100k subtree,
-    bit-identical output) — the duplicate word hashing is not the
-    bottleneck; per-element member-min arithmetic and the
-    collect+sort aggregation are. Keep the two independent trees
-    (simpler, and assemble_series shares featurize unchanged).
+    bit-identical output): per-element member-min arithmetic and the
+    collect+sort aggregation dominate, not the duplicate word hashing,
+    so featurize keeps its own independent tree.
     """
     from cutwed_spark.operators.blocking import (
         per_turn_member_mins,

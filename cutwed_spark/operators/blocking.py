@@ -85,23 +85,6 @@ def shingle_hashes_from_word_hashes(wh, k: int = DEFAULT_SHINGLE_K):
     )
 
 
-def turn_shingle_hashes(
-    transcripts: DataFrame, k: int = DEFAULT_SHINGLE_K
-) -> DataFrame:
-    """-> (conv_id, shb: array<bigint>) — per-TURN shingle hash arrays
-    (family v2: word-hash-mix base, see shingle_hashes_from_word_hashes).
-
-    No explode: the shingle set never becomes rows, so the minhash
-    aggregation shuffles 3 orders of magnitude fewer rows at 10^12-turn
-    scale (turns, not turn x shingle x hash).
-    """
-    return transcripts.select(
-        "conv_id", word_hash_col().alias("wh")
-    ).select(
-        "conv_id", shingle_hashes_from_word_hashes(F.col("wh"), k).alias("shb")
-    )
-
-
 _LONG_MAX = (1 << 63) - 1
 
 
@@ -153,24 +136,6 @@ def signature_from_mins(prefix: str, num_hashes: int):
     ).otherwise(sig)
 
 
-def minhash_from_hashes(
-    turn_hashes: DataFrame, num_hashes: int = DEFAULT_NUM_HASHES
-) -> DataFrame:
-    """(conv_id, shb) per turn -> (conv_id, sig: array<bigint>).
-
-    Per-turn partial mins fold through an ordinary min() aggregate, so
-    Catalyst's map-side partial aggregation applies and the shuffle
-    carries num_hashes bigints per turn-group, never shingle rows.
-    """
-    per_turn = per_turn_member_mins(F.col("shb"), num_hashes)
-    agg = (
-        turn_hashes.select("conv_id", *per_turn)
-        .groupBy("conv_id")
-        .agg(*[F.min(f"m{i}").alias(f"h{i}") for i in range(num_hashes)])
-    )
-    return agg.select("conv_id", signature_from_mins("h", num_hashes).alias("sig"))
-
-
 def lsh_block_keys(
     signatures: DataFrame,
     band_size: int = DEFAULT_BAND_SIZE,
@@ -190,33 +155,6 @@ def lsh_block_keys(
     ]
     return signatures.select(
         "conv_id", F.explode(F.array(*bands)).alias("block_key")
-    )
-
-
-def turn_text_block_keys(transcripts: DataFrame) -> DataFrame:
-    """Exact per-turn text fingerprint blocks (third blocking axis).
-
-    Near-duplicate conversations typically share >= 1 verbatim turn;
-    unrelated conversations essentially never share a full turn text.
-    One block key per distinct (conv_id, turn text). Boilerplate turns
-    (greetings, empty tool outputs) create huge blocks — those are
-    exactly what ``prune_oversized_blocks`` drops.
-    """
-    return (
-        transcripts.where(F.length("text") > 0)
-        .select(
-            "conv_id",
-            F.xxhash64(F.lit("turntext"), F.col("text")).alias("block_key"),
-        )
-        .dropDuplicates(["conv_id", "block_key"])
-    )
-
-
-def tool_sig_block_keys(series: DataFrame) -> DataFrame:
-    """Exact tool-sequence signature blocks (second blocking axis).
-    Only conversations that used >= 1 tool participate."""
-    return series.where(F.col("tool_sig") != "").select(
-        "conv_id", F.xxhash64(F.lit("toolsig"), F.col("tool_sig")).alias("block_key")
     )
 
 
@@ -281,65 +219,6 @@ def candidate_pairs(blocks: DataFrame) -> DataFrame:
         .select("conv_id_a", "conv_id_b")
         .dropDuplicates(["conv_id_a", "conv_id_b"])
     )
-
-
-def with_signatures(
-    transcripts: DataFrame,
-    series: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    shingle_k: int = DEFAULT_SHINGLE_K,
-    word_num_hashes: int = 8,
-    short_conv_turns: int = 8,
-) -> DataFrame:
-    """series + ``sig`` (k-gram minhash) + ``wsig`` (word minhash, short
-    conversations only, else null) — the blocking STATE columns.
-
-    Persisting these alongside the series makes blocking derivable from
-    state alone: the streaming/incremental path never re-reads old
-    transcripts, and the batch path computes each signature exactly once.
-
-    ONE aggregation tree: words are hashed once per turn; k-gram and
-    word-level member mins fold in the same projection and aggregate in
-    the same groupBy (k-gram + word mins together), so the transcripts
-    are scanned once and there is a single join onto series. The
-    word-level signature is computed for every conversation but kept
-    only for short ones (< short_conv_turns): word vocabularies collide
-    heavily across same-domain conversations, so the word axis is a
-    recall aid for conversations whose k-gram shingle sets are too
-    small to survive banding — for long conversations it would only
-    create non-discriminative mega-blocks.
-    """
-    # Materialize wh/shb as aliased columns in separate projections
-    # before the folds reference them — HOF lambdas are excluded from
-    # common-subexpression elimination, so inlining the expressions
-    # would recompute the word split + hashing once per member (see
-    # assemble.assemble_with_signatures for the measured impact).
-    hashed = transcripts.select(
-        "conv_id", word_hash_col().alias("wh")
-    ).select(
-        "conv_id",
-        "wh",
-        shingle_hashes_from_word_hashes(F.col("wh"), shingle_k).alias("shb"),
-    )
-    per_turn = hashed.select(
-        "conv_id",
-        *per_turn_member_mins(F.col("shb"), num_hashes, "m"),
-        *per_turn_member_mins(F.col("wh"), word_num_hashes, "w"),
-    )
-    agg = per_turn.groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("_n_turns_raw"),
-        *[F.min(f"m{i}").alias(f"hm{i}") for i in range(num_hashes)],
-        *[F.min(f"w{i}").alias(f"hw{i}") for i in range(word_num_hashes)],
-    )
-    sigs = agg.select(
-        "conv_id",
-        signature_from_mins("hm", num_hashes).alias("sig"),
-        F.when(
-            F.col("_n_turns_raw") < F.lit(short_conv_turns),
-            signature_from_mins("hw", word_num_hashes),
-        ).alias("wsig"),
-    )
-    return series.join(sigs, "conv_id", "left")
 
 
 def block_keys_from_state(

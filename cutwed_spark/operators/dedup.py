@@ -109,6 +109,14 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
+    return _jaccard_cut(inter, sizes, threshold)
+
+
+def _jaccard_cut(inter: DataFrame, sizes: DataFrame, min_jaccard: float) -> DataFrame:
+    """(doc_id_a, doc_id_b, n_shared) + per-doc set sizes (doc_id, n_sh)
+    -> (doc_id_a, doc_id_b, jaccard), keeping jaccard >= min_jaccard.
+    Jaccard is rounded to 4dp BEFORE the cut — the oracle SQL's rule,
+    so a borderline pair lands on the same side in Spark and DuckDB."""
     sa = sizes.select(F.col("doc_id").alias("doc_id_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_id_b"), F.col("n_sh").alias("n_b"))
     return (
@@ -121,16 +129,36 @@ def ngram_jaccard_pairs(
                 4,
             ),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= min_jaccard)
         .select("doc_id_a", "doc_id_b", "jaccard")
     )
 
 
-def _minhash_band_pairs(
-    sh: DataFrame, num_hashes: int, band_size: int
-) -> DataFrame:
-    """(doc_id, shingle) -> banded MinHash candidate pairs
-    (doc_id_a < doc_id_b)."""
+def _verified_pairs(cand: DataFrame, sh: DataFrame, min_jaccard: float) -> DataFrame:
+    """Candidate pairs (doc_id_a, doc_id_b) -> (doc_id_a, doc_id_b,
+    jaccard) by EXACT Jaccard over the full (doc_id, shingle) sets —
+    intersection work only for the candidates, never all-pairs. ``sh``
+    must hold each (doc_id, shingle) once: sizes and intersections
+    count rows."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    inter = (
+        cand.join(
+            sh.select(F.col("doc_id").alias("doc_id_a"), "shingle"), "doc_id_a"
+        )
+        .join(
+            sh.select(F.col("doc_id").alias("doc_id_b"), "shingle"),
+            ["doc_id_b", "shingle"],
+        )
+        .groupBy("doc_id_a", "doc_id_b")
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+    )
+    return _jaccard_cut(inter, sizes, min_jaccard)
+
+
+def _band_keys(sh: DataFrame, num_hashes: int, band_size: int) -> DataFrame:
+    """(doc_id, shingle) -> (doc_id, band_key): digest-split MinHash
+    signature cut into bands. The one band-key derivation for batch and
+    streaming dedup, so both agree on collisions by construction."""
     # 4 independent 32-bit slices per md5 digest (one-permutation-
     # hashing-style splitting): num_hashes min-hash functions cost only
     # ceil(num_hashes/4) digest computations per shingle row, and band
@@ -162,7 +190,15 @@ def _minhash_band_pairs(
             for b in range(n_bands)
         ]
     )
-    keys = sig.select("doc_id", F.explode(bands).alias("band_key"))
+    return sig.select("doc_id", F.explode(bands).alias("band_key"))
+
+
+def _minhash_band_pairs(
+    sh: DataFrame, num_hashes: int, band_size: int
+) -> DataFrame:
+    """(doc_id, shingle) -> banded MinHash candidate pairs
+    (doc_id_a < doc_id_b)."""
+    keys = _band_keys(sh, num_hashes, band_size)
     return (
         keys.alias("l")
         .join(keys.alias("r"), "band_key")
@@ -212,33 +248,7 @@ def minhash_lsh_verified_pairs(
     (rounded to 4dp before the cut, mirroring the oracle SQL)."""
     sh = scoped_persist(doc_shingles(docs, k))
     cand = _minhash_band_pairs(_rare_shingles(sh, max_df), num_hashes, band_size)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        cand.join(
-            sh.select(F.col("doc_id").alias("doc_id_a"), "shingle"), "doc_id_a"
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_id_b"), "shingle"),
-            ["doc_id_b", "shingle"],
-        )
-        .groupBy("doc_id_a", "doc_id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        inter.join(sa, "doc_id_a")
-        .join(sb, "doc_id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-                4,
-            ),
-        )
-        .where(F.col("jaccard") >= min_jaccard)
-        .select("doc_id_a", "doc_id_b", "jaccard")
-    )
+    return _verified_pairs(cand, sh, min_jaccard)
 
 
 def simhash_docs(docs: DataFrame, bits: int = 16) -> DataFrame:

@@ -183,9 +183,3 @@ def write_corpus(out_dir: str, n_conversations: int, seed: int = 42, **kw) -> No
     transcripts.to_parquet(os.path.join(out_dir, "transcripts.parquet"), index=False)
     labeled.to_parquet(os.path.join(out_dir, "labeled_pairs.parquet"), index=False)
 
-
-def load_transcripts(spark, path_or_df):
-    """Load transcripts into Spark from a parquet dir/file or pandas frame."""
-    if isinstance(path_or_df, pd.DataFrame):
-        return spark.createDataFrame(path_or_df)
-    return spark.read.parquet(path_or_df)

@@ -12,9 +12,8 @@ hasn't changed):
                 -> exact dup edges: md5(normalized text) joined against
                    the persisted (dup_hash, doc_id) index
                 -> near-dup candidates: new band keys joined against
-                   the persisted (band_key, doc_id) index, one side
-                   restricted to new docs (old x old structurally
-                   impossible), band sizes capped
+                   the persisted (band_key, doc_id) index, band sizes
+                   capped
                 -> candidates VERIFIED by exact Jaccard before they are
                    emitted (a band collision must never delete a
                    distinct document — operators/dedup.py contract);
@@ -24,6 +23,13 @@ hasn't changed):
                    scanning the store
                 -> append edges + new hashes + new band keys + new
                    shingles
+
+Batch and stream agree on band collisions and Jaccards because both
+call the same code: band keys and verification are the batch
+operators' ``_band_keys`` and ``_verified_pairs`` (operators/dedup.py),
+and the band-index join is ER ingest's ``_index_join_pairs``
+(streaming/ingest.py); ``tests/test_streaming_dedup.py`` pins the
+parity.
 
 Per-batch cost ~ O(batch + touched neighborhood + touched buckets),
 never O(corpus). The stream checkpoint provides exactly-once batch
@@ -38,7 +44,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cutwed_spark.operators.dedup import doc_shingles, normalized_text
+from cutwed_spark.operators.dedup import (
+    _band_keys,
+    _verified_pairs,
+    doc_shingles,
+    normalized_text,
+)
+from cutwed_spark.streaming.ingest import _compact_dir, _index_join_pairs
 
 DOC_SCHEMA = "doc_id bigint, text string"
 
@@ -59,48 +71,6 @@ def _paths(work_dir: str) -> dict:
 
 def _bucket(col):
     return F.pmod(F.xxhash64(col), F.lit(N_SHINGLE_BUCKETS)).cast("int")
-
-
-def _band_keys(sh: DataFrame, num_hashes: int, band_size: int) -> DataFrame:
-    """(doc_id, shingle) -> (doc_id, band_key) via the digest-split
-    signature (same family as the batch operator, so batch and stream
-    agree on collisions)."""
-    n_digests = (num_hashes + 3) // 4
-    pre = sh.select(
-        "doc_id",
-        *[
-            F.md5(F.concat(F.col("shingle"), F.lit(f"#{d}"))).alias(f"d{d}")
-            for d in range(n_digests)
-        ],
-    )
-    mins = [
-        F.min(F.substring(F.col(f"d{i // 4}"), 1 + 8 * (i % 4), 8)).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = pre.groupBy("doc_id").agg(*mins)
-    n_bands = num_hashes // band_size
-    bands = F.array(
-        *[
-            F.concat_ws(
-                "|",
-                F.lit(str(b)),
-                *[F.col(f"h{b * band_size + r}") for r in range(band_size)],
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return sig.select("doc_id", F.explode(bands).alias("band_key"))
-
-
-def _tril(pairs: DataFrame, a: str, b: str) -> DataFrame:
-    return (
-        pairs.where(F.col(a) != F.col(b))
-        .select(
-            F.least(a, b).alias("doc_id_a"),
-            F.greatest(a, b).alias("doc_id_b"),
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
 
 
 def _dedup_batch(
@@ -124,39 +94,25 @@ def _dedup_batch(
         if os.path.isdir(p["hashes"])
         else h_new
     )
-    exact = _tril(
+    exact = (
         all_h.join(
             h_new.select("dup_hash", F.col("doc_id").alias("doc_id_r")),
             "dup_hash",
-        ).select(F.col("doc_id").alias("a"), F.col("doc_id_r").alias("b")),
-        "a",
-        "b",
-    ).select(
-        "doc_id_a",
-        "doc_id_b",
-        F.lit("exact").alias("kind"),
-        F.lit(1.0).alias("jaccard"),
-    ).persist()
+        )
+        .where(F.col("doc_id") != F.col("doc_id_r"))
+        .select(
+            F.least("doc_id", "doc_id_r").alias("doc_id_a"),
+            F.greatest("doc_id", "doc_id_r").alias("doc_id_b"),
+            F.lit("exact").alias("kind"),
+            F.lit(1.0).alias("jaccard"),
+        )
+        .dropDuplicates(["doc_id_a", "doc_id_b"])
+        .persist()
+    )
 
     # --- near-dup candidates via the persisted band index ----------
     sh_new = doc_shingles(docs, k).persist()
     keys_new = _band_keys(sh_new, num_hashes, band_size).persist()
-    all_keys = (
-        spark.read.parquet(p["bands"]).unionByName(keys_new)
-        if os.path.isdir(p["bands"])
-        else keys_new
-    )
-    hot = keys_new.select("band_key").dropDuplicates(["band_key"])
-    touched = all_keys.join(hot, "band_key", "left_semi")
-    # band-size cap (count_distinct: replay-safe, like ER blocking)
-    ok = (
-        touched.groupBy("band_key")
-        .agg(F.count_distinct("doc_id").alias("n"))
-        .where((F.col("n") >= 2) & (F.col("n") <= max_band))
-        .select("band_key")
-    )
-    kept = touched.join(ok, "band_key")
-    kept_new = kept.join(docs.select("doc_id"), "doc_id", "left_semi")
     # exact pairs verify trivially at jaccard 1.0 through the band path
     # (identical docs share every band key), so anti-join them away:
     # each exact pair is emitted exactly once with kind='exact', and no
@@ -164,14 +120,14 @@ def _dedup_batch(
     # identical. This batch's `exact` set is complete for the purpose:
     # every candidate has >=1 new side, and any exact dup touching a
     # new doc is caught above via the hash index.
-    cand = _tril(
-        kept.alias("l")
-        .join(kept_new.alias("r"), "band_key")
-        .select(
-            F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b")
-        ),
-        "a",
-        "b",
+    cand = _index_join_pairs(
+        spark,
+        p["bands"],
+        keys_new,
+        docs.select("doc_id"),
+        "band_key",
+        "doc_id",
+        max_band,
     ).join(
         exact.select("doc_id_a", "doc_id_b"),
         ["doc_id_a", "doc_id_b"],
@@ -206,45 +162,9 @@ def _dedup_batch(
     # inflate asymmetrically and can flip the min_jaccard decision.
     # Dedup on (doc_id, shingle) first so both aggregates count SETS,
     # matching the band cap's count_distinct convention.
-    sh_all = sh_all.dropDuplicates(["doc_id", "shingle"])
-    sizes = sh_all.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        cand.join(
-            sh_all.select(F.col("doc_id").alias("doc_id_a"), "shingle"),
-            "doc_id_a",
-        )
-        .join(
-            sh_all.select(F.col("doc_id").alias("doc_id_b"), "shingle"),
-            ["doc_id_b", "shingle"],
-        )
-        .groupBy("doc_id_a", "doc_id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    verified = (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("doc_id_a"), F.col("n_sh").alias("n_a")),
-            "doc_id_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_id_b"), F.col("n_sh").alias("n_b")),
-            "doc_id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_shared")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-                4,
-            ),
-        )
-        .where(F.col("jaccard") >= min_jaccard)
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            F.lit("near").alias("kind"),
-            F.col("jaccard").cast("double"),
-        )
-    )
+    verified = _verified_pairs(
+        cand, sh_all.dropDuplicates(["doc_id", "shingle"]), min_jaccard
+    ).select("doc_id_a", "doc_id_b", F.lit("near").alias("kind"), "jaccard")
 
     # --- append outputs and state -----------------------------------
     # edges first (replays overwrite-by-append and are deduped by
@@ -282,8 +202,6 @@ def compact_dedup_state(
     Run while the stream is STOPPED — the directory swap is two
     renames. Returns {table: {"files_before": n, "files_after": m}}.
     """
-    from cutwed_spark.streaming.ingest import _compact_dir
-
     p = _paths(work_dir)
     n = target_files or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")

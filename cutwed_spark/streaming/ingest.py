@@ -131,44 +131,21 @@ def incremental_candidates(
 
     Returns ``(cand, new_keys)``; the caller appends ``new_keys`` to the
     index after the batch's writes succeed. Per-batch work is
-    O(new batch) key derivation + one narrow scan of the (conv_id,
-    block_key) index, restricted immediately to blocks a new
-    conversation touches — NOT O(full state) signature re-derivation
-    (the reference's device-resident-reuse principle,
+    O(new batch) key derivation + ``_index_join_pairs`` over the
+    (conv_id, block_key) index — NOT O(full state) signature
+    re-derivation (the reference's device-resident-reuse principle,
     /root/reference/src/cuTWED.h:47-53: don't recompute what hasn't
-    changed). Block-size pruning counts DISTINCT conv_ids per touched
-    block, so a replayed batch (crash between the keys append and the
-    stream checkpoint commit) cannot inflate sizes past ``max_block``.
+    changed).
     """
     new_keys = block_keys_from_state(new_state, cfg.band_size, cfg.num_hashes)
-    all_keys = (
-        spark.read.parquet(p["keys"]).unionByName(new_keys)
-        if os.path.isdir(p["keys"])
-        else new_keys
-    )
-    # Only blocks containing a new conversation can produce a new pair;
-    # everything else in the index is dead weight for this batch.
-    hot = new_keys.select("block_key").dropDuplicates(["block_key"])
-    touched = all_keys.join(hot, "block_key", "left_semi")
-    sized = touched.groupBy("block_key").agg(
-        F.count_distinct("conv_id").alias("block_size")
-    )
-    pair_keys = sized.where(
-        (F.col("block_size") >= 2) & (F.col("block_size") <= cfg.max_block)
-    ).select("block_key")
-    kept = touched.join(pair_keys, "block_key")
-    # one side restricted to NEW conversations: old-x-old pairs are
-    # structurally impossible, so incremental cost ~ new x neighborhood
-    kept_new = kept.join(new_state.select("conv_id"), "conv_id", "left_semi")
-    cand = (
-        kept.alias("l")
-        .join(kept_new.alias("r"), "block_key")
-        .where(F.col("l.conv_id") != F.col("r.conv_id"))
-        .select(
-            F.least("l.conv_id", "r.conv_id").alias("conv_id_a"),
-            F.greatest("l.conv_id", "r.conv_id").alias("conv_id_b"),
-        )
-        .dropDuplicates(["conv_id_a", "conv_id_b"])
+    cand = _index_join_pairs(
+        spark,
+        p["keys"],
+        new_keys,
+        new_state.select("conv_id"),
+        "block_key",
+        "conv_id",
+        cfg.max_block,
     )
     return cand, new_keys
 
@@ -283,6 +260,52 @@ def run_incremental(
     if await_termination:
         q.awaitTermination()
     return q
+
+
+def _index_join_pairs(
+    spark: SparkSession,
+    index_dir: str,
+    new_keys: DataFrame,
+    new_ids: DataFrame,
+    key: str,
+    id_col: str,
+    max_size: int,
+) -> DataFrame:
+    """The incremental index join shared by ER ingest and doc dedup:
+    the persisted (``id_col``, ``key``) index at ``index_dir`` plus
+    ``new_keys`` -> pairs (``{id_col}_a`` < ``{id_col}_b``) that share a
+    key and have at least one side in ``new_ids``.
+
+    Only keys a new row carries are read past the index scan; keys
+    with fewer than 2 or more than ``max_size`` DISTINCT ids are
+    dropped, so a replayed batch (crash between the index append and
+    the stream checkpoint commit) cannot inflate a key past the cap.
+    One side is restricted to new ids: old-x-old pairs are
+    structurally impossible, so per-batch cost ~ new x neighborhood."""
+    all_keys = (
+        spark.read.parquet(index_dir).unionByName(new_keys)
+        if os.path.isdir(index_dir)
+        else new_keys
+    )
+    hot = new_keys.select(key).dropDuplicates([key])
+    touched = all_keys.join(hot, key, "left_semi")
+    sized = touched.groupBy(key).agg(F.count_distinct(id_col).alias("block_size"))
+    pair_keys = sized.where(
+        (F.col("block_size") >= 2) & (F.col("block_size") <= max_size)
+    ).select(key)
+    kept = touched.join(pair_keys, key)
+    kept_new = kept.join(new_ids, id_col, "left_semi")
+    left, right = f"l.{id_col}", f"r.{id_col}"
+    return (
+        kept.alias("l")
+        .join(kept_new.alias("r"), key)
+        .where(F.col(left) != F.col(right))
+        .select(
+            F.least(left, right).alias(f"{id_col}_a"),
+            F.greatest(left, right).alias(f"{id_col}_b"),
+        )
+        .dropDuplicates([f"{id_col}_a", f"{id_col}_b"])
+    )
 
 
 def _compact_dir(

@@ -12,9 +12,9 @@ lifts that restriction with ``applyInPandasWithState``:
   quiescent), the assembled conversation is emitted ONCE and its state
   is dropped.
 
-The emitted rows carry the full sorted turn arrays, ready for
-featurize/assembly (explode back to turn rows, or feed a batch
-``assemble_series`` inside ``foreachBatch``). Late turns inside the
+The emitted rows carry the full sorted turn arrays; inside
+``foreachBatch``, ``conversations_to_turns`` restores the transcript
+layout that ``assemble_with_signatures`` consumes. Late turns inside the
 watermark are merged; turns later than the watermark are dropped by
 Spark upstream — the standard event-time contract.
 

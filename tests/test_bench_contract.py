@@ -70,3 +70,15 @@ def test_shrink_is_idempotent_at_limit():
     line1 = bench._shrink_headline(h)
     line2 = bench._shrink_headline(json.loads(line1))
     assert line1 == line2
+
+
+def test_efficiency_headlines_median_pair_not_best():
+    # The recorded score-probe pairs: one cross-window pair read 1.54,
+    # which no N-vs-4N run can reach. The headline is the median pair;
+    # the impossible ratio is flagged, and the raw list is kept.
+    eff = bench.pair_efficiency([0.33, 0.63, 1.54])
+    assert eff["efficiency"] == 0.63
+    assert eff["over_unity"] == [1.54]
+    assert eff["pair_efficiencies"] == [0.33, 0.63, 1.54]
+    # a median above 1.0 is never headlined
+    assert bench.pair_efficiency([1.1, 1.2, 0.9])["efficiency"] is None

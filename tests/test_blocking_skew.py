@@ -6,11 +6,10 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from cutwed_spark.operators.assemble import assemble_series
+from cutwed_spark.operators.assemble import assemble_with_signatures
 from cutwed_spark.operators.blocking import (
     build_candidate_pairs_from_state,
     prune_oversized_blocks,
-    with_signatures,
 )
 
 
@@ -48,7 +47,7 @@ def boilerplate_corpus(spark):
 
 def test_oversized_block_dropped_and_reported(spark, boilerplate_corpus):
     tr = boilerplate_corpus
-    series = with_signatures(tr, assemble_series(tr, 8, 64))
+    series = assemble_with_signatures(tr, 8, 64)
     pairs, stats = build_candidate_pairs_from_state(series, max_block=64)
     st = stats.collect()[0].asDict()
     # the greeting block (300 members) must be among the dropped ones

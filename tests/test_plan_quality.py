@@ -29,22 +29,11 @@ def test_featurize_is_jvm_only(small_corpus):
     assert "ArrowEvalPython" not in plan
 
 
-def test_assembly_single_exchange(spark, small_corpus):
-    """repartition(conv_id) doubles as the groupBy pre-shuffle: the
-    assembled-series plan holds exactly one Exchange."""
-    from cutwed_spark.operators.assemble import assemble_series
-
-    tr = small_corpus.repartition(8, "conv_id")
-    # simple mode prints each node once (formatted repeats nodes in the
-    # detail section)
-    plan = _plan(assemble_series(tr, 8, 64), mode="simple")
-    assert plan.count("Exchange") == 1, plan
-
-
 def test_one_pass_assembly_single_exchange(spark, small_corpus):
-    """The merged assembly+signature tree (the pipeline default) must
-    also hold exactly one Exchange — the whole point of folding the
-    signature aggregation into the assembly groupBy."""
+    """repartition(conv_id) doubles as the groupBy pre-shuffle: the
+    merged assembly+signature tree holds exactly one Exchange and no
+    join — the whole point of folding the signature aggregation into
+    the assembly groupBy."""
     from cutwed_spark.operators.assemble import assemble_with_signatures
 
     tr = small_corpus.repartition(8, "conv_id")
@@ -55,15 +44,12 @@ def test_one_pass_assembly_single_exchange(spark, small_corpus):
 
 def test_scoring_uses_shuffled_hash_join(spark, small_corpus):
     """The series-attachment joins skip SortMergeJoin's payload sort."""
-    from cutwed_spark.operators.assemble import assemble_series
-    from cutwed_spark.operators.blocking import (
-        build_candidate_pairs_from_state,
-        with_signatures,
-    )
+    from cutwed_spark.operators.assemble import assemble_with_signatures
+    from cutwed_spark.operators.blocking import build_candidate_pairs_from_state
     from cutwed_spark.operators.scoring import attach_series
 
     tr = small_corpus.repartition(8, "conv_id")
-    series = with_signatures(tr, assemble_series(tr, 8, 64))
+    series = assemble_with_signatures(tr, 8, 64)
     pairs, _ = build_candidate_pairs_from_state(series)
     plan = _plan(attach_series(pairs, series))
     # the two top-level attachment joins must be hash joins (shuffled
@@ -96,9 +82,10 @@ def test_no_forced_broadcast_on_unbounded_sides(spark, small_corpus):
     """The rare-shingle list (dedup) and the kept-block-key list
     (blocking) grow with the corpus — no broadcast HINT may be forced on
     them (AQE may still choose broadcast at runtime when sizes fit)."""
+    from cutwed_spark.operators.assemble import assemble_with_signatures
     from cutwed_spark.operators.blocking import (
+        block_keys_from_state,
         prune_oversized_blocks,
-        turn_text_block_keys,
     )
     from cutwed_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -109,7 +96,9 @@ def test_no_forced_broadcast_on_unbounded_sides(spark, small_corpus):
         ngram_jaccard_pairs(docs)._jdf.queryExecution().analyzed().toString()
     )
     assert "ResolvedHint" not in analyzed, "forced broadcast hint in dedup"
-    kept, _ = prune_oversized_blocks(turn_text_block_keys(small_corpus))
+    kept, _ = prune_oversized_blocks(
+        block_keys_from_state(assemble_with_signatures(small_corpus))
+    )
     analyzed = str(kept._jdf.queryExecution().analyzed().toString())
     assert "ResolvedHint" not in analyzed, "forced broadcast hint in blocking"
 

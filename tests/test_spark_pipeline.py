@@ -7,11 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from cutwed_spark.operators.assemble import assemble_series
-from cutwed_spark.operators.blocking import (
-    build_candidate_pairs_from_state,
-    with_signatures,
-)
+from cutwed_spark.operators.assemble import assemble_with_signatures
+from cutwed_spark.operators.blocking import build_candidate_pairs_from_state
 from cutwed_spark.operators.scoring import score_candidates, twed_scalar_udf, attach_series
 from cutwed_spark.plans.pipeline import PipelineConfig, run_pipeline
 from cutwed_spark.sources.synth import synth_corpus
@@ -56,7 +53,9 @@ def test_blocking_recall(spark, corpus):
     candidate pair — blocking recall bounds pipeline recall."""
     trdf, labdf, _, lab = corpus
     cfg = PipelineConfig()
-    series = with_signatures(trdf, assemble_series(trdf, cfg.n_buckets, cfg.max_turns))
+    series = assemble_with_signatures(
+        trdf, cfg.n_buckets, cfg.max_turns, num_hashes=cfg.num_hashes
+    )
     pairs, _ = build_candidate_pairs_from_state(series)
     pos = labdf.where("is_match")
     covered = pos.join(pairs, ["conv_id_a", "conv_id_b"]).count()
@@ -89,31 +88,6 @@ def test_degenerate_single_conversation(spark):
     assert clusters[0]["cluster_id"] == "only"
 
 
-def test_one_pass_assembly_matches_separate_trees(spark, corpus):
-    """assemble_with_signatures (single scan/shuffle, zero joins — the
-    pipeline default) must produce exactly the rows of the two-tree
-    formulation assemble_series + with_signatures."""
-    from cutwed_spark.operators.assemble import assemble_with_signatures
-
-    trdf, _, _, _ = corpus
-    cfg = PipelineConfig()
-    one = assemble_with_signatures(
-        trdf, cfg.n_buckets, cfg.max_turns, num_hashes=cfg.num_hashes
-    )
-    two = with_signatures(
-        trdf,
-        assemble_series(trdf, cfg.n_buckets, cfg.max_turns),
-        num_hashes=cfg.num_hashes,
-    ).select(*one.columns)
-    def key(r):
-        return r["conv_id"]
-    rows_one = sorted(one.collect(), key=key)
-    rows_two = sorted(two.collect(), key=key)
-    assert len(rows_one) == len(rows_two)
-    for a, b in zip(rows_one, rows_two):
-        assert a.asDict() == b.asDict(), (a["conv_id"],)
-
-
 def test_stable_turn_ordering_invariant(spark, corpus):
     """Per-turn text equality under stable (conv_id, turn_idx) ordering —
     the per-row invariant from BASELINE.json input_hint. Assembled
@@ -121,7 +95,7 @@ def test_stable_turn_ordering_invariant(spark, corpus):
     shuffle; exercised against a deliberately shuffled input."""
     trdf, _, tr, _ = corpus
     shuffled = trdf.orderBy(F.rand(seed=1))  # scramble row order
-    series = assemble_series(shuffled, 8, None)
+    series = assemble_with_signatures(shuffled, 8, None)
     got = {r["conv_id"]: list(r["text_hashes"]) for r in series.collect()}
     # expected: xxhash64 of text in turn_idx order, computed via Spark
     # on the UNshuffled input
@@ -158,7 +132,9 @@ def test_scalar_udf_matches_arrow_path(spark, corpus):
     path) and mapInArrow batch path agree."""
     trdf, _, _, _ = corpus
     cfg = PipelineConfig()
-    series = with_signatures(trdf, assemble_series(trdf, cfg.n_buckets, cfg.max_turns))
+    series = assemble_with_signatures(
+        trdf, cfg.n_buckets, cfg.max_turns, num_hashes=cfg.num_hashes
+    )
     pairs, _ = build_candidate_pairs_from_state(series)
     # deterministic subset: limit() on an unordered DF differs per run
     pairs = pairs.orderBy("conv_id_a", "conv_id_b").limit(20)
@@ -207,7 +183,9 @@ def test_salted_scoring_is_correctness_neutral(spark, corpus):
     the unsalted path."""
     trdf, _, _, _ = corpus
     cfg = PipelineConfig()
-    series = with_signatures(trdf, assemble_series(trdf, cfg.n_buckets, cfg.max_turns))
+    series = assemble_with_signatures(
+        trdf, cfg.n_buckets, cfg.max_turns, num_hashes=cfg.num_hashes
+    )
     pairs, _ = build_candidate_pairs_from_state(series)
     plain = {
         (r["conv_id_a"], r["conv_id_b"]): r["twed"]

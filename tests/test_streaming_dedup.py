@@ -146,3 +146,40 @@ def test_state_tables_shapes(dedup_out, spark):
     # index holds exactly the per-doc band keys
     bands = spark.read.parquet(p["bands"])
     assert bands.select("doc_id").distinct().count() == 8
+
+
+_DOCS = "/root/testdata/sf0.01/documents.parquet"
+
+
+@pytest.mark.skipif(not os.path.exists(_DOCS), reason="testdata not present")
+def test_stream_matches_batch_verified_pairs(spark, tmp_path):
+    """Batch/stream parity: two drops streamed through the incremental
+    indexes yield exactly the batch verified near-dup edges, with the
+    same Jaccards. Caps are set high enough that neither binds."""
+    from pyspark.sql import functions as F
+
+    from cutwed_spark.operators.dedup import minhash_lsh_verified_pairs
+
+    docs = spark.read.parquet(_DOCS).select("doc_id", "text")
+    drops, work = str(tmp_path / "drops"), str(tmp_path / "work")
+    for parity in (0, 1):
+        docs.where(F.col("doc_id") % 2 == parity).coalesce(1).write.mode(
+            "append"
+        ).parquet(drops)
+        run_incremental_dedup(
+            spark, drops, work, min_jaccard=0.35, max_band=10**9
+        )
+    stream = {
+        (r["doc_id_a"], r["doc_id_b"]): r["jaccard"]
+        for r in spark.read.parquet(_paths(work)["edges"])
+        .dropDuplicates(["doc_id_a", "doc_id_b"])
+        .collect()
+    }
+    batch = {
+        (r["doc_id_a"], r["doc_id_b"]): r["jaccard"]
+        for r in minhash_lsh_verified_pairs(
+            docs, min_jaccard=0.35, max_df=10**9
+        ).collect()
+    }
+    assert batch, "fixture produced no near-duplicates"
+    assert stream == batch
