@@ -62,7 +62,6 @@ def cmd_run(args) -> int:
         lamb=args.lamb,
         max_turns=args.max_turns,
         max_block=args.max_block,
-        salt=args.salt,
         num_partitions=args.shuffle_partitions,
         transfer_dtype=args.transfer_dtype,
     )
@@ -260,7 +259,6 @@ def main(argv=None) -> int:
     pr.add_argument("--lamb", type=float, default=0.5)
     pr.add_argument("--max-turns", dest="max_turns", type=int, default=128)
     pr.add_argument("--max-block", dest="max_block", type=int, default=64)
-    pr.add_argument("--salt", type=int, default=None)
     pr.add_argument("--transfer-dtype", dest="transfer_dtype", default="double",
                     choices=["double", "float"])
     pr.add_argument("--master", default=None)

@@ -108,3 +108,22 @@ def test_driver_order_puts_flagship_entries_in_first_50():
         "mm_feature_stats",
     ):
         assert name in first50, f"{name} outside the driver-recorded window"
+
+
+def test_oracle_sweep_edge_recall():
+    """The sweep's RECALL line: the share of exact (vec_id, neighbor_id)
+    edges an ANN result recovers; duplicate rows count once."""
+    import runpy
+    from pathlib import Path
+
+    tool = Path(__file__).resolve().parents[1] / "tools" / "check_oracles.py"
+    edge_recall = runpy.run_path(str(tool))["edge_recall"]
+
+    def edges(*pairs):
+        return pd.DataFrame(pairs, columns=["vec_id", "neighbor_id"])
+
+    exact = edges((1, 2), (1, 3), (2, 1), (2, 1))
+    approx = edges((1, 2), (2, 1), (2, 1), (5, 6))
+    assert edge_recall(exact, approx) == 2 / 3
+    assert edge_recall(exact, edges()) == 0.0
+    assert edge_recall(edges(), approx) == 0.0

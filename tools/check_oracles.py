@@ -1,6 +1,9 @@
 """Driver-emulation harness: run every __spark_entry__.queries() entry
 against its oracle_sql() via DuckDB at a given sf dir and compare
-row-count, column names, and order-insensitive values.
+row-count, column names, and order-insensitive values. Each query's
+Spark wall is printed as [x.xs]; the closing RECALL line gives the
+recall@5 of both ANN families against the exact cosine top-k, computed
+from the frames the sweep already collected.
 
 Usage: python tools/check_oracles.py [sf_dir] [query_name ...]
 """
@@ -55,10 +58,21 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[st
     return problems
 
 
+ANN_FAMILIES = ("emb_topk_auto", "emb_ivf_topk")  # recall@5 vs emb_cosine_topk
+
+
+def edge_recall(exact: pd.DataFrame, approx: pd.DataFrame) -> float:
+    """Fraction of the exact (vec_id, neighbor_id) edges that approx recovers."""
+    key = ["vec_id", "neighbor_id"]
+    truth = exact[key].drop_duplicates()
+    hits = truth.merge(approx[key].drop_duplicates(), on=key)
+    return len(hits) / max(len(truth), 1)
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
-    spark = get_spark(master="local[8]", shuffle_partitions=8, app_name="check-oracles")
+    spark = get_spark(app_name="check-oracles")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
@@ -68,6 +82,7 @@ def main() -> int:
     qs = entry.queries()
     oracles = entry.oracle_sql()
     failed = []
+    ann = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -79,6 +94,8 @@ def main() -> int:
             failed.append(name)
             continue
         dt = time.monotonic() - t0
+        if name == "emb_cosine_topk" or name in ANN_FAMILIES:
+            ann[name] = sdf
         if name not in oracles:
             print(f"ROWS-ONLY {name}: {len(sdf)} rows [{dt:.1f}s]")
             continue
@@ -94,6 +111,11 @@ def main() -> int:
             failed.append(name)
         else:
             print(f"OK   {name}: {len(sdf)} rows match [{dt:.1f}s]")
+    if "emb_cosine_topk" in ann:
+        print("RECALL " + " ".join(
+            f"{n}={edge_recall(ann['emb_cosine_topk'], ann[n]):.4f}"
+            for n in ANN_FAMILIES if n in ann
+        ))
     print(f"\n{'ALL OK' if not failed else 'FAILED: ' + ', '.join(failed)}")
     return 1 if failed else 0
 
