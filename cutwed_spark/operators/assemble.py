@@ -10,6 +10,11 @@ Stable ordering invariant: ``collect_list`` order is NOT deterministic
 under shuffle, so turns are collected as structs keyed by ``turn_idx``
 and ``array_sort``-ed — the per-row invariant the driver checks
 (SURVEY.md §7 hard part 6). Never rely on collect_list order.
+
+The projections are SQL text (``selectExpr``, ``F.expr`` inside the
+aggregation): built from ``F.*`` calls and Python lambdas they cost
+the assemble stage of a warm ``run_pipeline`` 8.1-8.8k py4j round
+trips, against 0.5-0.6k as text (ARCHITECTURE.md §1).
 """
 
 from __future__ import annotations
@@ -31,29 +36,20 @@ def _stage_turns(collected: DataFrame, max_turns: int | None, keep=()) -> DataFr
     common-subexpression elimination: that re-sliced (copied) the turn
     array once per turn per conversation. Multiply-referenced non-cheap
     aliases also block CollapseProject from undoing the split."""
-    turns = F.col("turns")
-    if max_turns is not None:
-        turns = F.slice(turns, 1, max_turns)
-    s1 = collected.select(
-        "conv_id", "n_turns_raw", *keep, turns.alias("_turns")
-    )
-    return s1.select(
-        "conv_id",
-        "n_turns_raw",
-        *keep,
-        "_turns",
-        F.col("_turns")[0]["t"].alias("_t0"),
+    turns = "turns" if max_turns is None else f"slice(turns, 1, {max_turns})"
+    s1 = collected.selectExpr("conv_id", "n_turns_raw", *keep, f"{turns} AS _turns")
+    return s1.selectExpr(
+        "conv_id", "n_turns_raw", *keep, "_turns", "_turns[0].t AS _t0"
     )
 
 
-def _series_columns() -> list:
-    """Projection from the staged (_turns, _t0, n_turns_raw) columns to
-    the series columns (stage with ``_stage_turns`` first)."""
-    turns = F.col("_turns")
-    t0 = F.col("_t0")
+def _series_columns() -> list[str]:
+    """SQL projection from the staged (_turns, _t0, n_turns_raw) columns
+    to the series columns (stage with ``_stage_turns`` first). No lambda
+    variable may be named like a column its body reads (``_t0``)."""
     return [
-        F.size(turns).cast("int").alias("n_turns"),
-        (F.col("n_turns_raw") - F.size(turns)).cast("int").alias("n_truncated"),
+        "CAST(size(_turns) AS INT) AS n_turns",
+        "CAST(n_turns_raw - size(_turns) AS INT) AS n_truncated",
         # FLAT (n_turns * dim) value buffer — the reference's dense
         # C-ordered layout (README.rst:40-42). One list level fewer
         # halves Arrow offset overhead on the scoring hot path; reshape
@@ -64,14 +60,11 @@ def _series_columns() -> list:
         # float64 before the DP, so scores stay oracle-exact for these
         # stored values. Times stay float64 (sub-second precision over
         # long conversations).
-        F.flatten(F.transform(turns, lambda s: s["feat"]))
-        .cast("array<float>")
-        .alias("values_flat"),
-        F.transform(turns, lambda s: s["t"] - t0).alias("times"),
-        F.transform(turns, lambda s: s["text_hash"]).alias("text_hashes"),
-        F.concat_ws(
-            "|", F.filter(F.transform(turns, lambda s: s["tool"]), lambda x: x != "")
-        ).alias("tool_sig"),
+        "CAST(flatten(transform(_turns, s -> s.feat)) AS ARRAY<FLOAT>) AS values_flat",
+        "transform(_turns, s -> s.t - _t0) AS times",
+        "transform(_turns, s -> s.text_hash) AS text_hashes",
+        "concat_ws('|', filter(transform(_turns, s -> s.tool), x -> x != ''))"
+        " AS tool_sig",
     ]
 
 
@@ -123,7 +116,7 @@ def assemble_with_signatures(
         per_turn_member_mins,
         shingle_hashes_from_word_hashes,
         signature_from_mins,
-        word_hash_col,
+        word_hash_sql,
     )
 
     feat = with_turn_features(
@@ -138,40 +131,39 @@ def assemble_with_signatures(
     # (measured ~5x on the assemble stage). A producer alias referenced
     # many times by non-cheap consumers also blocks CollapseProject
     # from undoing the split.
-    hashed = feat.select(
+    hashed = feat.selectExpr(
         "conv_id",
-        F.struct("turn_idx", "feat", "t", "text_hash", "tool").alias("turn"),
-        word_hash_col().alias("wh"),
-    ).select(
+        "struct(turn_idx, feat, t, text_hash, tool) AS turn",
+        f"{word_hash_sql()} AS wh",
+    ).selectExpr(
         "conv_id",
         "turn",
         "wh",
-        shingle_hashes_from_word_hashes(F.col("wh"), shingle_k).alias("shb"),
+        f"{shingle_hashes_from_word_hashes('wh', shingle_k)} AS shb",
     )
-    per_turn = hashed.select(
+    per_turn = hashed.selectExpr(
         "conv_id",
         "turn",
-        *per_turn_member_mins(F.col("shb"), num_hashes, "m"),
-        *per_turn_member_mins(F.col("wh"), word_num_hashes, "w"),
+        *per_turn_member_mins("shb", num_hashes, "m"),
+        *per_turn_member_mins("wh", word_num_hashes, "w"),
     )
-    collected = per_turn.groupBy("conv_id").agg(
-        F.array_sort(F.collect_list("turn")).alias("turns"),
-        F.count(F.lit(1)).alias("n_turns_raw"),
-        *[F.min(f"m{i}").alias(f"hm{i}") for i in range(num_hashes)],
-        *[F.min(f"w{i}").alias(f"hw{i}") for i in range(word_num_hashes)],
-    )
+    aggs = [
+        "array_sort(collect_list(turn)) AS turns",
+        "count(1) AS n_turns_raw",
+        *[f"min(m{i}) AS hm{i}" for i in range(num_hashes)],
+        *[f"min(w{i}) AS hw{i}" for i in range(word_num_hashes)],
+    ]
+    collected = per_turn.groupBy("conv_id").agg(*[F.expr(e) for e in aggs])
     sig_cols = [f"hm{i}" for i in range(num_hashes)] + [
         f"hw{i}" for i in range(word_num_hashes)
     ]
     staged = _stage_turns(collected, max_turns, keep=sig_cols)
-    return staged.select(
+    return staged.selectExpr(
         "conv_id",
         *_series_columns(),
-        signature_from_mins("hm", num_hashes).alias("sig"),
-        F.when(
-            F.col("n_turns_raw") < F.lit(short_conv_turns),
-            signature_from_mins("hw", word_num_hashes),
-        ).alias("wsig"),
+        f"{signature_from_mins('hm', num_hashes)} AS sig",
+        f"CASE WHEN n_turns_raw < {short_conv_turns}"
+        f" THEN {signature_from_mins('hw', word_num_hashes)} END AS wsig",
     )
 
 

@@ -14,6 +14,12 @@ joins, aggregates): map-side partial aggregation computes the k minhash
 mins per conversation, and oversized LSH buckets (non-discriminative
 "stopword" blocks — the skew hazard, SURVEY.md §7 hard part 4) are
 dropped with the drop surfaced as a metric, never silently.
+
+The signature and block-key builders return SQL expression text that
+the callers apply with ``selectExpr``: building the same expressions
+from ``F.*`` calls and Python lambdas costs about 6 py4j round trips
+per call and 60 per lambda on every plan build, and assemble alone
+builds 40 member-min folds (ARCHITECTURE.md §1).
 """
 
 from __future__ import annotations
@@ -22,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cutwed_spark.cache import scoped_persist
+from cutwed_spark.operators.featurize import words_sql
 
 DEFAULT_NUM_HASHES = 32
 DEFAULT_BAND_SIZE = 2
@@ -36,21 +43,20 @@ DEFAULT_MAX_BLOCK = 64
 SIGNATURE_FAMILY_VERSION = 2
 
 
-def word_hash_col(text: str = "text"):
-    """array<bigint>: xxhash64 of each lower-cased whitespace token —
-    every word is hashed exactly ONCE; all shingle/minhash machinery
-    downstream works on these fixed-width bigints. NULL text coerces to
-    the empty array (NOT a null array): a null would propagate through
-    the member-min folds and defeat the empty-conversation sentinel."""
-    words = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text), F.lit(""))), r"\s+"),
-        lambda w: w != "",
-    )
-    return F.transform(words, lambda w: F.xxhash64(w))
+def word_hash_sql() -> str:
+    """SQL for array<bigint>: xxhash64 of each lower-cased whitespace
+    token of ``text`` — every word is hashed exactly ONCE; all
+    shingle/minhash machinery downstream works on these fixed-width
+    bigints. NULL text coerces to the empty array (NOT a null array): a
+    null would propagate through the member-min folds and defeat the
+    empty-conversation sentinel."""
+    words = words_sql("coalesce(text, '')")
+    return f"transform({words}, w -> xxhash64(w))"
 
 
-def shingle_hashes_from_word_hashes(wh, k: int = DEFAULT_SHINGLE_K):
-    """array<bigint> word hashes -> array<bigint> k-gram shingle hashes.
+def shingle_hashes_from_word_hashes(wh: str, k: int = DEFAULT_SHINGLE_K) -> str:
+    """SQL: array<bigint> word hashes column ``wh`` -> array<bigint>
+    k-gram shingle hashes.
 
     A shingle's base hash is xxhash64 of its k word hashes — shingle
     STRINGS are never built (concat_ws + re-hashing the string was a
@@ -63,36 +69,24 @@ def shingle_hashes_from_word_hashes(wh, k: int = DEFAULT_SHINGLE_K):
     """
     if k == 1:
         return wh
-    whole = F.xxhash64(
-        F.aggregate(
-            wh,
-            F.lit(0).cast("bigint"),
-            lambda a, b: F.shiftleft(a, 1).bitwiseXOR(b),
-        )
-    )
+    whole = f"xxhash64(aggregate({wh}, 0L, (a, b) -> shiftleft(a, 1) ^ b))"
+    gram = ", ".join(f"element_at({wh}, i + {j + 1})" for j in range(k))
     return (
-        F.when(
-            F.size(wh) >= k,
-            F.transform(
-                F.sequence(F.lit(0), F.size(wh) - k),
-                lambda i: F.xxhash64(
-                    *[F.element_at(wh, i + j + 1) for j in range(k)]
-                ),
-            ),
-        )
-        .when(F.size(wh) > 0, F.array(whole))
-        .otherwise(F.array().cast("array<bigint>"))
+        f"CASE WHEN size({wh}) >= {k}"
+        f" THEN transform(sequence(0, size({wh}) - {k}), i -> xxhash64({gram}))"
+        f" WHEN size({wh}) > 0 THEN array({whole})"
+        " ELSE CAST(array() AS ARRAY<BIGINT>) END"
     )
 
 
-_LONG_MAX = (1 << 63) - 1
+_LONG_MAX_SQL = f"{(1 << 63) - 1}L"
 
 
-def per_turn_member_mins(shb, num_hashes: int, prefix: str = "m") -> list:
-    """num_hashes per-turn partial-min columns over an array<bigint> of
-    shingle base hashes. Family member i of base hash b is
-    xxhash64(b, i) (bigint re-hash — an independent family, cheap on
-    fixed width). An empty array folds to the _LONG_MAX sentinel.
+def per_turn_member_mins(shb: str, num_hashes: int, prefix: str = "m") -> list[str]:
+    """num_hashes per-turn partial-min SQL columns over an array<bigint>
+    column ``shb`` of shingle base hashes. Family member i of base hash b
+    is xxhash64(b, i) (bigint re-hash — an independent family, cheap on
+    fixed width). An empty array folds to the _LONG_MAX_SQL sentinel.
 
     Measured negative result (round 3): deriving members by double
     hashing (h1 + i*h2 from a materialized array<struct<h1,h2>>, one
@@ -109,31 +103,28 @@ def per_turn_member_mins(shb, num_hashes: int, prefix: str = "m") -> list:
     best-of-3 interleaved on the 100k assemble subtree) with
     bit-identical mins — per-element arithmetic dominates, not
     per-array traversal count. Keep the simpler separate folds."""
-
-    def _merge(i):
-        return lambda acc, b: F.least(acc, F.xxhash64(b, F.lit(i)))
-
     return [
-        F.aggregate(shb, F.lit(_LONG_MAX), _merge(i)).alias(f"{prefix}{i}")
+        f"aggregate({shb}, {_LONG_MAX_SQL}, (acc, b) -> least(acc, xxhash64(b, {i})))"
+        f" AS {prefix}{i}"
         for i in range(num_hashes)
     ]
 
 
-def signature_from_mins(prefix: str, num_hashes: int):
-    """min-of-per-turn-mins columns h{i} -> nullable sig array column.
-    A conversation whose every turn is empty has no shingles at all;
-    its sentinel-only signature would LSH-collide with every other
+def signature_from_mins(prefix: str, num_hashes: int) -> str:
+    """SQL: min-of-per-turn-mins columns {prefix}{i} -> nullable sig
+    array. A conversation whose every turn is empty has no shingles at
+    all; its sentinel-only signature would LSH-collide with every other
     empty conversation — exactly the non-discriminative block the size
     cap would drop anyway, so null it out here. A NULL min (possible
     only if every per-turn fold was NULL) is treated like the sentinel:
-    a bare == comparison would evaluate to NULL and fall through to
-    otherwise(), emitting an array of NULLs that all degenerate
-    conversations share as a block key."""
-    sig = F.array(*[F.col(f"{prefix}{i}") for i in range(num_hashes)])
-    first = F.col(f"{prefix}0")
-    return F.when(
-        first.isNull() | (first == F.lit(_LONG_MAX)), F.lit(None)
-    ).otherwise(sig)
+    a bare = comparison would evaluate to NULL and fall through to the
+    ELSE, emitting an array of NULLs that all degenerate conversations
+    share as a block key."""
+    sig = ", ".join(f"{prefix}{i}" for i in range(num_hashes))
+    return (
+        f"CASE WHEN {prefix}0 IS NULL OR {prefix}0 = {_LONG_MAX_SQL} THEN NULL"
+        f" ELSE array({sig}) END"
+    )
 
 
 def lsh_block_keys(
@@ -147,15 +138,13 @@ def lsh_block_keys(
     mixed in so identical mins in different bands cannot collide.
     """
     n_bands = num_hashes // band_size
-    bands = [
-        F.xxhash64(
-            F.lit(b), *[F.col("sig")[b * band_size + r] for r in range(band_size)]
-        ).alias("block_key")
+    bands = ", ".join(
+        "xxhash64({}, {})".format(
+            b, ", ".join(f"sig[{b * band_size + r}]" for r in range(band_size))
+        )
         for b in range(n_bands)
-    ]
-    return signatures.select(
-        "conv_id", F.explode(F.array(*bands)).alias("block_key")
     )
+    return signatures.selectExpr("conv_id", f"explode(array({bands})) AS block_key")
 
 
 def prune_oversized_blocks(
@@ -235,24 +224,22 @@ def block_keys_from_state(
     3. exact tool-sequence signature,
     4. exact per-turn text fingerprint (text_hashes).
     """
-    lsh = lsh_block_keys(state.where(F.col("sig").isNotNull()), band_size, num_hashes)
-    wbands = [
-        F.xxhash64(F.lit("wordmh"), F.lit(b), F.col("wsig")[b]).alias("bk")
-        for b in range(word_num_hashes)
-    ]
-    wlsh = (
-        state.where(F.col("wsig").isNotNull())
-        .select("conv_id", F.explode(F.array(*wbands)).alias("block_key"))
+    lsh = lsh_block_keys(state.where("sig IS NOT NULL"), band_size, num_hashes)
+    wbands = ", ".join(
+        f"xxhash64('wordmh', {b}, wsig[{b}])" for b in range(word_num_hashes)
     )
-    tool = state.where(F.col("tool_sig") != "").select(
-        "conv_id", F.xxhash64(F.lit("toolsig"), F.col("tool_sig")).alias("block_key")
+    wlsh = state.where("wsig IS NOT NULL").selectExpr(
+        "conv_id", f"explode(array({wbands})) AS block_key"
     )
-    ttext = state.select(
-        "conv_id",
-        F.explode_outer(F.col("text_hashes")).alias("th"),
-    ).select(
-        "conv_id", F.xxhash64(F.lit("turntext"), F.col("th")).alias("block_key")
-    ).where(F.col("block_key").isNotNull()).dropDuplicates(["conv_id", "block_key"])
+    tool = state.where("tool_sig != ''").selectExpr(
+        "conv_id", "xxhash64('toolsig', tool_sig) AS block_key"
+    )
+    ttext = (
+        state.selectExpr("conv_id", "explode_outer(text_hashes) AS th")
+        .selectExpr("conv_id", "xxhash64('turntext', th) AS block_key")
+        .where("block_key IS NOT NULL")
+        .dropDuplicates(["conv_id", "block_key"])
+    )
     return lsh.unionByName(wlsh).unionByName(tool).unionByName(ttext)
 
 

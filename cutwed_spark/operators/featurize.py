@@ -20,6 +20,12 @@ Deterministic, locale-free, and cheap; duplicates with small word edits
 land at small L2 distance per turn, so TWED separates them from
 same-topic non-duplicates.
 
+Every expression here is SQL text applied with ``selectExpr``, not a
+tree of ``F.*`` calls and Python lambdas: on PySpark 4.1 each ``F.*``
+call costs about 6 py4j round trips and each lambda about 60, and this
+stage has n_buckets + 2 lambdas (ARCHITECTURE.md §1). Doubles are written
+with :func:`sql_double` because a bare SQL ``3.0`` is a DECIMAL.
+
 The word-bucket array is materialized as an aliased column in its OWN
 projection before the n_buckets count filters consume it: Spark skips
 common-subexpression elimination inside higher-order-function lambdas,
@@ -31,8 +37,7 @@ referenced alias also stops CollapseProject from undoing the split.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 DEFAULT_BUCKETS = 8
 
@@ -41,49 +46,51 @@ def feature_dim(n_buckets: int = DEFAULT_BUCKETS) -> int:
     return n_buckets + 6
 
 
-def words_col(text: str = "text") -> Column:
-    """Lower-cased whitespace tokens, empties removed."""
-    return F.filter(F.split(F.lower(F.col(text)), r"\s+"), lambda w: w != "")
+def sql_double(x: float) -> str:
+    """A DOUBLE literal in SQL text (``3.0D``; a bare ``3.0`` is DECIMAL)."""
+    return f"{float(x)!r}D"
+
+
+def words_sql(text: str) -> str:
+    """SQL for the lower-cased whitespace tokens of the string expression
+    ``text``, empties removed (split's regex ``\\s+`` written as a SQL
+    string literal)."""
+    return f"filter(split(lower({text}), '\\\\s+'), w -> w != '')"
 
 
 def _feature_array(
-    wb: Column,
+    wb: str,
     n_buckets: int,
     bucket_scale: float,
     role_scale: float,
-) -> Column:
-    """array<double> feature vector from a MATERIALIZED word-bucket-id
-    array column ``wb`` plus the raw text/role/tool columns. ``size(wb)``
-    doubles as the word count (one bucket id per word)."""
+) -> str:
+    """SQL for the array<double> feature vector from a MATERIALIZED
+    word-bucket-id array column ``wb`` plus the raw text/role/tool
+    columns. ``size(wb)`` doubles as the word count (one bucket id per
+    word)."""
     buckets = [
-        (
-            F.size(F.filter(wb, lambda h: h == k)) * F.lit(float(bucket_scale))
-        ).cast("double")
+        f"size(filter({wb}, h -> h = {k})) * {sql_double(bucket_scale)}"
         for k in range(n_buckets)
     ]
     role_code = (
-        F.when(F.col("role") == "user", 0.0)
-        .when(F.col("role") == "assistant", 1.0)
-        .when(F.col("role") == "tool", 2.0)
-        .otherwise(3.0)
+        "CASE WHEN role = 'user' THEN 0.0D WHEN role = 'assistant' THEN 1.0D"
+        " WHEN role = 'tool' THEN 2.0D ELSE 3.0D END"
     )
-    tool_code = F.when(
-        (F.col("tool").isNotNull()) & (F.col("tool") != ""),
-        (F.pmod(F.xxhash64(F.col("tool")), F.lit(7)) + F.lit(1)).cast("double"),
-    ).otherwise(F.lit(0.0))
-    n_chars = F.length(F.coalesce(F.col("text"), F.lit(""))).cast("double")
-    n_words = F.size(wb).cast("double")
+    tool_code = (
+        "CASE WHEN tool IS NOT NULL AND tool != ''"
+        " THEN CAST(pmod(xxhash64(tool), 7) + 1 AS DOUBLE) ELSE 0.0D END"
+    )
+    n_chars = "CAST(length(coalesce(text, '')) AS DOUBLE)"
+    n_words = f"CAST(size({wb}) AS DOUBLE)"
     surface = [
-        role_code * F.lit(float(role_scale)),
+        f"{role_code} * {sql_double(role_scale)}",
         tool_code,
-        F.log1p(n_chars),
+        f"log1p({n_chars})",
         n_words,
-        F.when(n_words > 0, n_chars / n_words).otherwise(0.0),
-        F.length(
-            F.regexp_replace(F.coalesce(F.col("text"), F.lit("")), r"[^.!?,;:]", "")
-        ).cast("double"),
+        f"CASE WHEN {n_words} > 0 THEN {n_chars} / {n_words} ELSE 0.0D END",
+        "CAST(length(regexp_replace(coalesce(text, ''), '[^.!?,;:]', '')) AS DOUBLE)",
     ]
-    return F.array(*buckets, *surface)
+    return f"array({', '.join(buckets + surface)})"
 
 
 def with_turn_features(
@@ -97,20 +104,12 @@ def with_turn_features(
     (per-turn text-equality invariant carrier) + ``t: double`` (epoch
     seconds, float64 — the TWED time axis, matching the reference's
     plain-float time stamps, /root/reference/cuTWED/cuTWED.py:38-44)."""
-    staged = df.select(
-        "*",
-        F.transform(
-            words_col(), lambda t: F.pmod(F.xxhash64(t), F.lit(n_buckets))
-        ).alias("_wb"),
-    )
-    return staged.select(
-        *df.columns,
-        _feature_array(
-            F.col("_wb"), n_buckets, bucket_scale, role_scale
-        ).alias(out),
-        F.xxhash64(F.col("text")).alias("text_hash"),
+    wb = f"transform({words_sql('text')}, w -> pmod(xxhash64(w), {n_buckets}))"
+    staged = df.selectExpr("*", f"{wb} AS _wb")
+    return staged.selectExpr(
+        *[f"`{c}`" for c in df.columns],
+        f"{_feature_array('_wb', n_buckets, bucket_scale, role_scale)} AS `{out}`",
+        "xxhash64(text) AS text_hash",
         # cast covers TIMESTAMP_NTZ parquet columns (session TZ is UTC)
-        (
-            F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(1_000_000.0)
-        ).cast("double").alias("t"),
+        "unix_micros(CAST(ts AS TIMESTAMP)) / 1000000.0D AS t",
     )

@@ -34,6 +34,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cutwed_spark.operators.featurize import sql_double
 from cutwed_spark.twed.core import _root, twed_pairs
 
 SCORE_SCHEMA = (
@@ -163,23 +164,15 @@ def attach_series(
     flat series buffers. Two shuffle joins on conv_id; Catalyst prunes
     the series table to (conv_id, values_flat, times) before the
     shuffle."""
-    v = F.col("values_flat")
+    v = "values_flat"
     if transfer_dtype == "float":
-        v = v.cast("array<float>")
-    t = F.col("times")
+        v = "CAST(values_flat AS ARRAY<FLOAT>)"
+    t = "times"
     if time_scale != 1.0:
-        t = F.transform(t, lambda x: x * F.lit(float(time_scale)))
-    slim = series.select("conv_id", v.alias("v"), t.alias("t"))
-    a = slim.select(
-        F.col("conv_id").alias("conv_id_a"),
-        F.col("v").alias("va"),
-        F.col("t").alias("ta"),
-    )
-    b = slim.select(
-        F.col("conv_id").alias("conv_id_b"),
-        F.col("v").alias("vb"),
-        F.col("t").alias("tb"),
-    )
+        t = f"transform(times, x -> x * {sql_double(time_scale)})"
+    slim = series.selectExpr("conv_id", f"{v} AS v", f"{t} AS t")
+    a = slim.selectExpr("conv_id AS conv_id_a", "v AS va", "t AS ta")
+    b = slim.selectExpr("conv_id AS conv_id_b", "v AS vb", "t AS tb")
     # SHUFFLE_HASH on the series side: skips SortMergeJoin's sort of the
     # array-payload rows (~15-20% off the stage). Safe at scale — the
     # per-partition build side is series_bytes / n_shuffle_partitions,

@@ -61,6 +61,37 @@ def test_scoring_uses_shuffled_hash_join(spark, small_corpus):
     )[0] or "ShuffledHashJoin" in head
 
 
+def test_plan_build_round_trip_budget(spark, small_corpus, monkeypatch):
+    """Building the assemble and block-key plans (no action) stays within
+    1,500 py4j round trips. Every ``F.*`` call costs about 6 round trips
+    and every Python-lambda fold about 60, so a builder that goes back
+    from SQL text to Column trees and lambdas (about 9-10k here) fails."""
+    import gc
+
+    from py4j.java_gateway import GatewayClient
+
+    from cutwed_spark.operators.assemble import assemble_with_signatures
+    from cutwed_spark.operators.blocking import block_keys_from_state
+
+    def build():
+        block_keys_from_state(assemble_with_signatures(small_corpus))
+
+    build()  # first build: one-time JVM class and function lookups
+    gc.collect()
+    calls = [0]
+    send = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(GatewayClient, "send_command", counting)
+    build()
+    gc.collect()  # the freed Java handles cost a round trip each
+    monkeypatch.undo()
+    assert calls[0] <= 1500, calls[0]
+
+
 def test_parquet_pushdown_and_pruning(spark, tmp_path):
     """Filters reach the parquet scan; the scan reads only used columns."""
     p = str(tmp_path / "t")

@@ -1,7 +1,9 @@
 """Driver-emulation harness: run every __spark_entry__.queries() entry
 against its oracle_sql() via DuckDB at a given sf dir and compare
 row-count, column names, and order-insensitive values. Each query's
-Spark wall is printed as [x.xs]; the closing RECALL line gives the
+Spark wall is printed as [x.xs], after a WARMUP [x.xs] line that times
+one tiny Arrow/Python round trip, so the first query's wall does not
+include session warm-up. The closing RECALL line gives the
 recall@5 of both ANN families against the exact cosine top-k, computed
 from the frames the sweep already collected.
 
@@ -78,6 +80,12 @@ def main() -> int:
     con = duckdb.connect()
     for t in entry.TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+
+    # Session warm-up (Python worker launch, Arrow, first codegen) on its
+    # own line, so the first query's [x.xs] below is a query wall too.
+    t0 = time.monotonic()
+    spark.range(8).mapInArrow(lambda batches: batches, "id long").toPandas()
+    print(f"WARMUP [{time.monotonic() - t0:.1f}s]")
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
