@@ -295,7 +295,10 @@ def run_pipeline(
         metrics["n_match_edges"] = edges.count()
 
     with stage("cluster"):
-        clusters, cc_iters = assign_clusters(series, edges)
+        metrics["cluster"] = {"edges_in": metrics["n_match_edges"]}
+        clusters, cc_iters = assign_clusters(
+            series, edges, stats=metrics["cluster"]
+        )
         clusters = clusters.persist()
         metrics["cc_iterations"] = cc_iters
         metrics["n_clusters"] = clusters.select("cluster_id").distinct().count()

@@ -177,6 +177,27 @@ def test_cluster_recovery(result, corpus):
     assert neg_bad == 0
 
 
+def test_cluster_paths_agree(spark, corpus, result, monkeypatch):
+    """The default run labels its small match graph on the driver; with
+    the edge budget below its edge count run_pipeline takes the
+    distributed loop and reports the same clusters and CC rounds."""
+    from cutwed_spark.operators import clustering
+
+    cl = result.metrics["cluster"]
+    assert cl["path"] == "driver"
+    assert cl["edges_in"] == result.metrics["n_match_edges"] > 1
+    assert len(cl["edges_per_round"]) == result.metrics["cc_iterations"]
+    trdf, labdf, _, _ = corpus
+    monkeypatch.setattr(clustering, "_DRIVER_CC_MAX_EDGES", 1)
+    res = run_pipeline(spark, trdf, PipelineConfig(), labeled=labdf)
+    assert res.metrics["cluster"] == {**cl, "path": "distributed"}
+    assert res.metrics["cc_iterations"] == result.metrics["cc_iterations"]
+    assert {tuple(r) for r in res.clusters.collect()} == {
+        tuple(r) for r in result.clusters.collect()
+    }
+    res.unpersist()
+
+
 def test_salted_scoring_is_correctness_neutral(spark, corpus):
     """SURVEY.md §4 manual item (a): salted repartitioning defuses hot
     keys WITHOUT changing any score — same pairs, same TWED values as
