@@ -196,11 +196,7 @@ def cmd_stream(args) -> int:
     process available files (availableNow), then threshold + cluster
     the accumulated state."""
     from cutwed_spark.plans.pipeline import PipelineConfig
-    from cutwed_spark.streaming.ingest import (
-        finalize,
-        publish_bucketed_state,
-        run_incremental,
-    )
+    from cutwed_spark.streaming.ingest import finalize, run_incremental
 
     spark = _spark(args)
     cfg = PipelineConfig(threshold=args.threshold)
@@ -211,19 +207,7 @@ def cmd_stream(args) -> int:
         cfg,
         max_files_per_trigger=args.max_files,
     )
-    # Publish the drained state as a conv_id-bucketed catalog table by
-    # default: the epilogue (and any later scoring session) then joins
-    # the multi-TB state side with no Exchange. Degrades to the plain
-    # parquet dir when the catalog refuses (no metastore) — the stream
-    # work dir stays the durable source of truth either way.
-    state_table = None
-    if args.bucket_table:
-        try:
-            publish_bucketed_state(spark, args.work, table=args.bucket_table)
-            state_table = args.bucket_table
-        except Exception as exc:  # pragma: no cover - catalog-dependent
-            print(f"bucketed-state publish skipped: {exc}", file=sys.stderr)
-    edges, clusters = finalize(spark, args.work, cfg, state_table=state_table)
+    edges, clusters = finalize(spark, args.work, cfg)
     out = args.output or os.path.join(args.work, "out")
     os.makedirs(out, exist_ok=True)
     edges.write.mode("overwrite").parquet(os.path.join(out, "edges"))
@@ -231,7 +215,6 @@ def cmd_stream(args) -> int:
     summary = {
         "n_match_edges": edges.count(),
         "n_clusters": clusters.select("cluster_id").distinct().count(),
-        "bucketed_state_table": state_table,
         "out": out,
     }
     print(json.dumps(summary))
@@ -286,13 +269,6 @@ def main(argv=None) -> int:
     pt.add_argument("--output", default=None, help="default <work>/out")
     pt.add_argument("--threshold", type=float, default=0.35)
     pt.add_argument("--max-files", dest="max_files", type=int, default=None)
-    pt.add_argument(
-        "--bucket-table",
-        dest="bucket_table",
-        default="er_state_bucketed",
-        help="catalog table for the bucketed state publication "
-        "(empty string disables)",
-    )
     pt.add_argument("--master", default=None)
     pt.add_argument("--shuffle-partitions", dest="shuffle_partitions", type=int,
                     default=None)

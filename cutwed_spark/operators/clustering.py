@@ -39,6 +39,10 @@ from pyspark.sql import functions as F
 # engine's short conv_ids, plus a few int64 arrays of the edge count.
 _DRIVER_CC_MAX_EDGES = 1_000_000
 
+# Round cap of both paths: one constant, so the driver and distributed
+# loops stop at the same round and report the same ``cc_iterations``.
+_CC_MAX_ROUNDS = 25
+
 
 def _edge_fingerprint(edges: DataFrame) -> tuple[int, int]:
     row = edges.agg(
@@ -78,7 +82,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 25, edges_per_round: list | None = None
+    edges: DataFrame, edges_per_round: list | None = None
 ) -> tuple[DataFrame, int]:
     """edges (conv_id_a, conv_id_b) -> (assignments (conv_id, cluster_id),
     n_iterations). cluster_id is the component's minimum conv_id.
@@ -95,7 +99,7 @@ def connected_components(
     ).localCheckpoint()
     prev_fp = None
     it = 0
-    for it in range(1, max_iter + 1):
+    for it in range(1, _CC_MAX_ROUNDS + 1):
         cur = _small_star(_large_star(cur)).localCheckpoint()
         fp = _edge_fingerprint(cur)
         if edges_per_round is not None:
@@ -142,9 +146,7 @@ def _np_small_star(u: np.ndarray, v: np.ndarray, n: int):
     )
 
 
-def driver_components(
-    edges: pd.DataFrame, max_iter: int = 25
-) -> tuple[pd.DataFrame, int, list[int]]:
+def driver_components(edges: pd.DataFrame) -> tuple[pd.DataFrame, int, list[int]]:
     """``connected_components`` on the driver: pandas edges (conv_id_a,
     conv_id_b) -> (assignments, n_iterations, edges_per_round), equal
     to the distributed loop's output round for round.
@@ -165,7 +167,7 @@ def driver_components(
     prev = None
     it = 0
     per_round: list[int] = []
-    for it in range(1, max_iter + 1):
+    for it in range(1, _CC_MAX_ROUNDS + 1):
         u, v = _np_small_star(*_np_large_star(u, v, n), n)
         per_round.append(len(u))
         if prev is not None and np.array_equal(prev[0], u) and np.array_equal(prev[1], v):
@@ -181,7 +183,6 @@ def driver_components(
 def assign_clusters(
     series: DataFrame,
     match_edges: DataFrame,
-    max_iter: int = 25,
     stats: dict | None = None,
 ) -> tuple[DataFrame, int]:
     """All conversations -> cluster ids; singletons are their own cluster.
@@ -198,12 +199,12 @@ def assign_clusters(
     per_round: list[int] = []
     if len(edges_pd) <= _DRIVER_CC_MAX_EDGES:
         path = "driver"
-        cc_pd, iters, per_round = driver_components(edges_pd, max_iter)
+        cc_pd, iters, per_round = driver_components(edges_pd)
         cc = spark.createDataFrame(cc_pd, "conv_id string, cluster_id string")
     else:
         path = "distributed"
         del edges_pd
-        cc, iters = connected_components(match_edges, max_iter, per_round)
+        cc, iters = connected_components(match_edges, per_round)
     if stats is not None:
         stats.update(path=path, edges_per_round=per_round)
     out = (

@@ -136,6 +136,18 @@ def calibrate_threshold(
     return _f1_curve(scores, labels)
 
 
+def unsupervised_threshold(scored: DataFrame, score_col: str) -> float:
+    """The cut when neither a threshold nor labels are given — one rule
+    for the batch pipeline and the stream epilogue. twed_ratio is
+    scale-free in (0, 1], so a fixed conservative 0.35 works without
+    labels and runs no job; any other score column has its own scale
+    and takes its 5th percentile (0.5 when nothing is scored)."""
+    if score_col == "twed_ratio":
+        return 0.35
+    q = scored.agg(F.expr(f"percentile_approx({score_col}, 0.05)")).collect()[0][0]
+    return 0.5 if q is None else float(q)
+
+
 def evaluate_pairs(edges: DataFrame, labeled: DataFrame) -> dict:
     """Pairwise precision/recall/F1 of predicted match edges vs labels."""
     pred = edges.select("conv_id_a", "conv_id_b").withColumn("pred", F.lit(True))
@@ -282,14 +294,7 @@ def run_pipeline(
             threshold, cal_f1 = calibrate_threshold(scored, labeled, cfg.score_col)
             metrics["calibration_f1"] = cal_f1
         else:
-            # Unsupervised fallback: twed_ratio is scale-free, so a
-            # fixed conservative cut works without labels.
-            threshold = 0.35 if cfg.score_col == "twed_ratio" else float(
-                scored.agg(
-                    F.expr(f"percentile_approx({cfg.score_col}, 0.05)")
-                ).collect()[0][0]
-                or 0.5
-            )
+            threshold = unsupervised_threshold(scored, cfg.score_col)
         edges = scored.where(F.col(cfg.score_col) <= F.lit(threshold))
         metrics["threshold"] = threshold
         metrics["n_match_edges"] = edges.count()

@@ -9,6 +9,10 @@ the analog of the reference's host->device memcpy boundary,
 The generated-class cache is sized to hold a whole pipeline run, so a
 warm ``run_pipeline`` in a long-lived session reuses the code the
 previous run compiled instead of paying Janino again.
+
+The engine keeps its state in parquet dirs and creates no catalog
+table; ``spark.sql.warehouse.dir`` is set only so a deployment's own
+managed tables land outside the working tree ($SPARK_GRAFT_WAREHOUSE).
 """
 
 from __future__ import annotations
@@ -61,8 +65,8 @@ def get_spark(
         # 1000 holds ~5 runs. Static SQL conf: it must be set here,
         # before the session exists.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
-        # Bucketed tables (sources/io.py:write_bucketed) live under the
-        # session catalog's warehouse; keep it off the repo working tree.
+        # Managed catalog tables (a deployment's saveAsTable) live under
+        # the warehouse dir; keep it off the working tree.
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

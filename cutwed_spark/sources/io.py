@@ -22,6 +22,9 @@ Address forms accepted everywhere a ``src`` or ``dst`` appears:
   (requires the runtime; raises a clear error otherwise);
 * ``db.table``-looking identifiers when Iceberg is available;
 * anything else — a filesystem path read/written as parquet.
+
+Nothing here registers a catalog table: a conv_id-bucketed copy of the
+stream state measured no gain for its only reader (BASELINE.md).
 """
 
 from __future__ import annotations
@@ -62,49 +65,6 @@ def read_table(spark: SparkSession, src: str) -> DataFrame:
             )
         return spark.read.format("iceberg").load(name)
     return spark.read.parquet(src)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 256,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a BUCKETED table (hash-partitioned into ``n_buckets``
-    files per partition on ``bucket_cols``, optionally sorted within
-    buckets).
-
-    This is the 100-TB co-location primitive: two tables bucketed the
-    same way join on the bucket columns with NO Exchange on either side
-    (and with ``sort_cols`` matching the join keys, no Sort either —
-    Spark reads bucket i of both tables into the same task), and a
-    groupBy on the bucket columns aggregates without a shuffle. The
-    streaming state table (streaming/ingest.py) and the assembled-
-    series table are the intended users: scoring's attach joins then
-    fetch the series payload co-located instead of shuffling the
-    multi-TB state every batch. tests/test_bucketed_io.py asserts the
-    Exchange-free plans.
-
-    Bucketing rides Spark's session catalog (``saveAsTable``) because
-    bucket metadata lives in the catalog, not the files; with an
-    in-memory catalog (this sandbox) the table is session-scoped, with
-    a Hive/Iceberg catalog it is durable — same call either way.
-    """
-    writer = (
-        df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a table written by ``write_bucketed``; the catalog carries
-    the bucket spec, so downstream joins/aggs on the bucket columns
-    plan shuffle-free (assert with ``.explain`` — no Exchange)."""
-    return spark.table(table)
 
 
 def write_table(

@@ -41,10 +41,11 @@ from cutwed_spark.operators.assemble import assemble_with_signatures
 from cutwed_spark.operators.blocking import (
     SIGNATURE_FAMILY_VERSION,
     block_keys_from_state,
+    length_filter_pairs,
 )
 from cutwed_spark.operators.clustering import assign_clusters
 from cutwed_spark.operators.scoring import score_candidates
-from cutwed_spark.plans.pipeline import PipelineConfig
+from cutwed_spark.plans.pipeline import PipelineConfig, unsupervised_threshold
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -109,19 +110,6 @@ def check_state_version(state_dir: str) -> None:
             json.dump(current, fh)
 
 
-def _write_state_marker(state_dir: str) -> None:
-    marker = _state_version_marker(state_dir)
-    if not os.path.isfile(marker):
-        with open(marker, "w") as fh:
-            json.dump(
-                {
-                    "signature_family_version": SIGNATURE_FAMILY_VERSION,
-                    "state_format": STATE_FORMAT_VERSION,
-                },
-                fh,
-            )
-
-
 def incremental_candidates(
     spark: SparkSession, new_state: DataFrame, p: dict, cfg: PipelineConfig
 ) -> tuple[DataFrame, DataFrame]:
@@ -169,12 +157,11 @@ def _incremental_batch(
     # on synth_corpus(500).
     if new_state.isEmpty():
         return
-    check_state_version(p["state"])
-    # Marker BEFORE the first state append: a crash between the two
-    # must not leave compatible state that the version guard then
-    # rejects as pre-versioning.
+    # The guard writes the marker into a fresh dir, so it lands BEFORE
+    # the first state append: a crash between the two must not leave
+    # compatible state that the guard then rejects as pre-versioning.
     os.makedirs(p["state"], exist_ok=True)
-    _write_state_marker(p["state"])
+    check_state_version(p["state"])
     have_state = any(
         f.endswith(".parquet") for f in os.listdir(p["state"])
     )
@@ -189,14 +176,15 @@ def _incremental_batch(
 
     # Scoring still reads the state table — candidate pairs need the
     # OLD side's series payload. That is a payload fetch (column-
-    # pruned, join-filtered), not a recompute; at warehouse scale the
-    # state table should be bucketed by conv_id so this join
-    # co-locates without a shuffle of the big side.
+    # pruned, join-filtered), not a recompute.
     full = (
         spark.read.parquet(p["state"]).unionByName(new_state)
         if have_state
         else new_state
     )
+    if cfg.length_ratio_max is not None:
+        # the same comparison cleaning run_pipeline's blocking applies
+        cand = length_filter_pairs(cand, full, cfg.length_ratio_max)
     scored = score_candidates(
         cand,
         full,
@@ -395,103 +383,28 @@ def compact_stream_state(
     return out
 
 
-def publish_bucketed_state(
-    spark: SparkSession,
-    work_dir: str,
-    table: str = "er_state_bucketed",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Publish the accumulated state table as a catalog table BUCKETED
-    by ``conv_id`` (maintenance pass, like ``compact_stream_state``).
-
-    Scoring's attach joins fetch each candidate's series payload by
-    conv_id (operators/scoring.py:attach_series). Against the plain
-    parquet state dir both join sides shuffle; against the bucketed
-    table the state side's HashPartitioning comes from the bucket spec,
-    so only the per-batch candidate side exchanges — at warehouse scale
-    that is the difference between shuffling a multi-TB table every
-    batch and shuffling kilobytes of pair ids
-    (tests/test_bucketed_io.py asserts the Exchange elimination).
-
-    Run with the stream stopped, after ``compact_stream_state``; pass
-    the returned DataFrame (or ``read_bucketed(spark, table)``) as the
-    ``series`` argument to ``score_candidates``. Durable only with a
-    persistent metastore (Hive/Iceberg); with the sandbox's in-memory
-    catalog the table lives for the session and the call is repeated
-    per session — degrading to the plain dir is correctness-neutral.
-    """
-    from cutwed_spark.sources.io import read_bucketed, write_bucketed
-
-    p = _paths(work_dir)
-    n = n_buckets or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    state = spark.read.parquet(p["state"]).dropDuplicates(["conv_id"])
-    _clear_stale_managed_location(spark, table)
-    write_bucketed(state, table, ["conv_id"], n_buckets=n,
-                   sort_cols=["conv_id"])
-    return read_bucketed(spark, table)
-
-
-def _clear_stale_managed_location(spark: SparkSession, table: str) -> None:
-    """Remove a leftover managed-table directory for ``table`` when the
-    table is NOT registered in the current catalog.
-
-    With the in-memory catalog, a previous session's
-    ``publish_bucketed_state`` leaves the table's files under the
-    warehouse dir while the registration dies with that session; the
-    next session's ``saveAsTable`` then refuses ("location is not
-    empty") and the publish would silently degrade on every subsequent
-    run. Only acts on local ``file:`` warehouses — with a persistent
-    metastore (Hive/Iceberg) the table stays registered and overwrite
-    mode handles it, so this is a no-op there."""
-    if spark.catalog.tableExists(table):
-        return  # saveAsTable(mode=overwrite) replaces a registered table
-    import shutil
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", ""))
-    if wh.scheme not in ("", "file"):
-        return
-    parts = table.split(".")
-    if len(parts) == 2:
-        loc = os.path.join(wh.path, f"{parts[0].lower()}.db",
-                           parts[1].lower())
-    else:
-        loc = os.path.join(wh.path, parts[-1].lower())
-    if loc and os.path.isdir(loc):
-        shutil.rmtree(loc)
-
-
 def finalize(
     spark: SparkSession,
     work_dir: str,
     cfg: PipelineConfig | None = None,
-    state_table: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Batch epilogue over the accumulated stream state: threshold the
-    scored edges (cfg.threshold required — streaming has no labeled
-    calibration) and run connected components.
-
-    ``state_table``: name of a catalog table published by
-    :func:`publish_bucketed_state`. When given and present, the state
-    side reads from it instead of the plain parquet dir — the scan
-    arrives hash-partitioned by conv_id, so the distinct and any
-    downstream conv_id join/agg plan without an Exchange on the
-    multi-TB side. Falls back to the plain dir when the table is
-    absent (no metastore), correctness-neutral either way.
-    Returns (edges, clusters)."""
+    scored edges and run connected components over the state dir's
+    conv_ids. Streaming has no labeled calibration, so without
+    ``cfg.threshold`` the cut is ``unsupervised_threshold`` — the same
+    rule ``run_pipeline`` applies. Returns (edges, clusters)."""
     cfg = cfg or PipelineConfig()
     p = _paths(work_dir)
     scored = spark.read.parquet(p["scored"]).dropDuplicates(
         ["conv_id_a", "conv_id_b"]
     )
-    thr = cfg.threshold if cfg.threshold is not None else 0.35
+    thr = (
+        cfg.threshold
+        if cfg.threshold is not None
+        else unsupervised_threshold(scored, cfg.score_col)
+    )
     edges = scored.where(F.col(cfg.score_col) <= F.lit(thr))
-    if state_table is not None and spark.catalog.tableExists(state_table):
-        from cutwed_spark.sources.io import read_bucketed
-
-        state = read_bucketed(spark, state_table)
-    else:
-        state = spark.read.parquet(p["state"])
+    state = spark.read.parquet(p["state"])
     clusters, _ = assign_clusters(
         state.select("conv_id").dropDuplicates(["conv_id"]), edges
     )

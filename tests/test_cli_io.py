@@ -106,22 +106,15 @@ def test_cli_stream(spark, tmp_path, capsys):
     tr[tr.conv_id.isin(half)].to_parquet(in_dir / "d1.parquet", index=False)
     tr[~tr.conv_id.isin(half)].to_parquet(in_dir / "d2.parquet", index=False)
     work = str(tmp_path / "work")
+    tables_before = {t.name for t in spark.catalog.listTables()}
     assert main(["stream", "--input", str(in_dir), "--work", work,
                  "--threshold", "0.5", "--max-files", "1",
                  "--master", "local[4]"]) == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["n_match_edges"] > 0
     assert spark.read.parquet(os.path.join(summary["out"], "clusters")).count() > 0
-    # the drained state is published as a conv_id-bucketed catalog
-    # table by default (finalize + later scoring sessions join it
-    # Exchange-free on the state side)
-    try:
-        assert summary["bucketed_state_table"] == "er_state_bucketed"
-        assert spark.catalog.tableExists("er_state_bucketed")
-        n_state = spark.read.parquet(os.path.join(work, "state")).count()
-        assert spark.table("er_state_bucketed").count() == n_state
-    finally:
-        spark.sql("DROP TABLE IF EXISTS er_state_bucketed")
+    # the work dir is the only state the stream keeps: no catalog table
+    assert {t.name for t in spark.catalog.listTables()} == tables_before
 
 
 def test_cli_stream_dedup(spark, tmp_path, capsys):

@@ -13,6 +13,7 @@ from cutwed_spark.sources.synth import synth_corpus
 from cutwed_spark.streaming.ingest import finalize, run_incremental
 
 THRESHOLD = 0.5  # fixed: streaming has no labeled calibration
+LENGTH_RATIO = 1.2
 
 
 @pytest.fixture(scope="module")
@@ -138,68 +139,49 @@ def test_incremental_candidates_scan_only_index(spark, split_corpus):
     assert cand.count() >= 0
 
 
-def test_finalize_routes_through_bucketed_state(spark, split_corpus):
-    """finalize(state_table=...) must read the state side from the
-    bucketed catalog table (hash-partitioned by conv_id at the scan, no
-    Exchange for the distinct) and return the same clusters as the
-    plain-parquet path."""
-    from cutwed_spark.streaming.ingest import publish_bucketed_state
+def test_stream_honours_length_ratio_max(spark, split_corpus, tmp_path):
+    """length_ratio_max prunes the stream's candidates as it prunes the
+    batch pipeline's: one config scores one pair universe."""
+    from pyspark.sql import functions as F
 
+    in_dir, _, tr, _ = split_corpus
+    cfg = PipelineConfig(threshold=THRESHOLD, length_ratio_max=LENGTH_RATIO)
+    work = str(tmp_path / "work_len")
+    run_incremental(spark, in_dir, work, cfg, max_files_per_trigger=1)
+    s_edges, _ = finalize(spark, work, cfg)
+
+    b = run_pipeline(spark, spark.createDataFrame(tr), cfg)
+    assert {(r["conv_id_a"], r["conv_id_b"]) for r in s_edges.collect()} == {
+        (r["conv_id_a"], r["conv_id_b"]) for r in b.edges.collect()
+    }
+    scored = spark.read.parquet(os.path.join(work, "scored"))
+    assert scored.count() > 0
+    too_long = scored.where(
+        F.greatest("n_a", "n_b") > F.least("n_a", "n_b") * LENGTH_RATIO
+    )
+    assert too_long.count() == 0
+
+
+def test_finalize_unsupervised_threshold_follows_score_col(spark, split_corpus):
+    """Without a threshold, finalize cuts twed_norm at its own 5th
+    percentile (run_pipeline's rule), not at twed_ratio's fixed 0.35."""
     in_dir, work_dir, _, _ = split_corpus
-    cfg = PipelineConfig(threshold=THRESHOLD)
-    e_plain, c_plain = finalize(spark, work_dir, cfg)
-    plain = {r["conv_id"]: r["cluster_id"] for r in c_plain.collect()}
-    spark.sql("DROP TABLE IF EXISTS t_finalize_bk")
-    try:
-        publish_bucketed_state(spark, work_dir, table="t_finalize_bk",
-                               n_buckets=8)
-        e_bk, c_bk = finalize(spark, work_dir, cfg,
-                              state_table="t_finalize_bk")
-        plan = c_bk._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        assert "t_finalize_bk" in plan and "Bucketed: true" in plan
-        assert {r["conv_id"]: r["cluster_id"] for r in c_bk.collect()} == plain
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_finalize_bk")
-    # absent table degrades to the plain dir, correctness-neutral
-    _, c_missing = finalize(spark, work_dir, cfg, state_table="no_such_tbl")
-    assert {r["conv_id"]: r["cluster_id"] for r in c_missing.collect()} == plain
-
-
-def test_publish_bucketed_state_recovers_stale_location(spark, split_corpus):
-    """A leftover managed-table dir from a dead session (in-memory
-    catalog: the files survive under the warehouse, the registration
-    doesn't) must not wedge the publish forever — saveAsTable refuses a
-    non-empty unregistered location, so publish clears it first
-    (round-4 advice)."""
-    import os
-    from urllib.parse import urlparse
-
-    from cutwed_spark.streaming.ingest import publish_bucketed_state
-
-    in_dir, work_dir, _, _ = split_corpus
-    if not os.path.isdir(os.path.join(work_dir, "state")):
-        # standalone-safe: earlier module tests normally drain the stream
-        run_incremental(spark, in_dir, work_dir,
-                        PipelineConfig(threshold=THRESHOLD),
-                        max_files_per_trigger=1)
-    tbl = "t_stale_publish"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    loc = os.path.join(wh, tbl)
-    os.makedirs(loc, exist_ok=True)
-    stale = os.path.join(loc, "part-stale.parquet")
-    with open(stale, "w") as f:
-        f.write("stale bytes from a dead session")
-    try:
-        df = publish_bucketed_state(spark, work_dir, table=tbl, n_buckets=4)
-        assert df.count() > 0
-        assert not os.path.exists(stale)  # stale copy cleaned, not merged
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    edges, _ = finalize(spark, work_dir, PipelineConfig(score_col="twed_norm"))
+    scored = (
+        spark.read.parquet(os.path.join(work_dir, "scored"))
+        .dropDuplicates(["conv_id_a", "conv_id_b"])
+        .toPandas()
+    )
+    e = edges.toPandas()
+    assert len(e) > 0
+    cut = e["twed_norm"].max()
+    # a cut on twed_norm, at its 5th percentile
+    below = scored[scored["twed_norm"] <= cut]
+    assert set(zip(e["conv_id_a"], e["conv_id_b"])) == set(
+        zip(below["conv_id_a"], below["conv_id_b"])
+    )
+    norm = scored["twed_norm"]
+    assert (norm < cut).mean() < 0.05 <= (norm <= cut).mean()
 
 
 def test_compact_stream_state(spark, split_corpus, tmp_path):
