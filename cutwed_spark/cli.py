@@ -63,7 +63,6 @@ def cmd_run(args) -> int:
         max_turns=args.max_turns,
         max_block=args.max_block,
         num_partitions=args.shuffle_partitions,
-        transfer_dtype=args.transfer_dtype,
     )
     res = run_pipeline(
         spark, transcripts, cfg, labeled=labeled, checkpoint_dir=args.checkpoint
@@ -242,8 +241,6 @@ def main(argv=None) -> int:
     pr.add_argument("--lamb", type=float, default=0.5)
     pr.add_argument("--max-turns", dest="max_turns", type=int, default=128)
     pr.add_argument("--max-block", dest="max_block", type=int, default=64)
-    pr.add_argument("--transfer-dtype", dest="transfer_dtype", default="double",
-                    choices=["double", "float"])
     pr.add_argument("--master", default=None)
     pr.add_argument("--shuffle-partitions", dest="shuffle_partitions", type=int,
                     default=None)

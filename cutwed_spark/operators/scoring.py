@@ -10,17 +10,18 @@ vectorized NumPy — packing from Arrow list buffers to padded
 (the input_hint's "no per-row Python" requirement).
 
 Scale/throughput design (measured on the 20k-conversation bench):
-* series travel as ONE flat array<double> per conversation (the
-  reference's dense C-ordered buffer, README.rst:40-42) — one Arrow
-  offset level fewer than array<array<double>> = ~1.4x faster transfer;
+* series travel as ONE flat array per conversation (the reference's
+  dense C-ordered buffer, README.rst:40-42) — one Arrow offset level
+  fewer than an array of arrays = ~1.4x faster transfer;
 * NO unconditional repartition: the join output feeds mapInArrow
   directly and AQE handles partition sizing/skew. An optional ``salt``
   forces a salted redistribution for pathologically hot conversations
   (SURVEY.md §4 manual item a) — it costs a full extra shuffle of the
   array payload, so it is opt-in, not default;
-* optional ``transfer_dtype='float'`` halves transfer bytes (the
-  reference's float32 twin kernels, src/cuTWED.cu:120-158) at ~1e-7
-  relative score error; float64 stays the default (oracle-exact).
+* series values travel as float32, because the state stores
+  ``values_flat`` as ``ARRAY<FLOAT>`` (``transfer_dtype`` changes
+  nothing); the UDF upcasts them to float64 before the DP, so scores
+  are oracle-exact for the stored values.
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cutwed_spark.operators.featurize import sql_double
-from cutwed_spark.twed.core import _root, twed_pairs
+from cutwed_spark.twed.core import _batch_local_costs, twed_pairs
 
 SCORE_SCHEMA = (
     "conv_id_a string, conv_id_b string, n_a int, n_b int, "
@@ -49,19 +50,13 @@ def _self_delete_cost(V, T, L, nu, lamb, degree):
     twed.c:179-181). Normalizing d(A,B) by d(A,0)+d(0,B) gives a
     length- and magnitude-invariant score in (0, 1].
 
-    Local costs follow the kernel's root convention (core._root):
-    degree<0 is the Marteau no-root repro mode (twed.c:114-119), so
-    ``twed_ratio`` stays consistent with the kernel there too."""
-    deg = abs(int(degree))
+    Local costs are the kernel's own (core._batch_local_costs), so
+    degree<0 is the Marteau no-root repro mode (twed.c:114-119) here
+    too and ``twed_ratio`` stays consistent with the kernel."""
     P, n_max, _ = V.shape
-    first = _root(np.sum(np.abs(V[:, 0]) ** deg, axis=-1), degree, deg)
-    if n_max >= 2:
-        d = V[:, 1:] - V[:, :-1]
-        step = _root(np.sum(np.abs(d) ** deg, axis=-1), degree, deg)
-        mask = np.arange(1, n_max)[None, :] < L[:, None]
-        local = first + np.sum(step * mask, axis=1)
-    else:
-        local = first
+    lc = _batch_local_costs(V, degree, abs(int(degree)))
+    mask = np.arange(1, n_max)[None, :] < L[:, None]
+    local = lc[:, 1] + np.sum(lc[:, 2:] * mask, axis=1)
     local[L == 0] = 0.0
     idx = np.maximum(L - 1, 0)
     t_last = T[np.arange(P), idx]

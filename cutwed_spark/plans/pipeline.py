@@ -68,7 +68,7 @@ class PipelineConfig:
     # of the array payload; AQE's skew join handles moderate skew free)
     salt: int | None = None
     num_partitions: int | None = None
-    transfer_dtype: str = "double"  # 'float' halves Arrow bytes (twedf twin)
+    transfer_dtype: str = "double"  # no effect: values_flat is already float
 
     @property
     def dim(self) -> int:
@@ -97,17 +97,27 @@ class PipelineResult:
 
 
 def _f1_curve(scores: np.ndarray, labels: np.ndarray) -> tuple[float, float]:
-    """Best (threshold, F1): predicted-match iff score <= threshold."""
+    """Best (threshold, F1): predicted-match iff score <= threshold.
+
+    Only finite scores are candidate cuts: an infinite cut would make
+    every scored pair an edge. Raises ValueError if no score is finite.
+    """
     order = np.argsort(scores, kind="stable")
     s, y = scores[order], labels[order].astype(np.int64)
+    finite = np.isfinite(s)
+    if not finite.any():
+        raise ValueError("no labeled pair has a finite score to calibrate on")
     tp = np.cumsum(y)
     fp = np.cumsum(1 - y)
     total_pos = int(y.sum())
     fn = total_pos - tp
     f1 = 2 * tp / np.maximum(2 * tp + fp + fn, 1)
-    k = int(np.argmax(f1))
-    # threshold midway between the accepted score and the next one
-    thr = float(s[k]) if k == len(s) - 1 else float((s[k] + s[k + 1]) / 2)
+    k = int(np.argmax(np.where(finite, f1, -1.0)))
+    # threshold midway between the accepted score and the next one, if finite
+    if k + 1 < len(s) and finite[k + 1]:
+        thr = float((s[k] + s[k + 1]) / 2)
+    else:
+        thr = float(s[k])
     return thr, float(f1[k])
 
 

@@ -21,12 +21,14 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Rows per Arrow record batch: the unit the score UDF pads and chunks.
+_ARROW_BATCH_ROWS = 2048
+
 
 def get_spark(
     app_name: str = "cutwed-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 2048,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
@@ -54,7 +56,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(_ARROW_BATCH_ROWS))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

@@ -205,6 +205,14 @@ def pytwed_oracle(A, TA, B, TB, nu: float, lamb: float) -> float:
 # ------------------------------------------------------------------
 
 
+def _compute_dtype(A, B) -> type:
+    """Dtype dispatch (the reference's twed/twedf macro twins,
+    ``src/cuTWED.cu:120-158``): float32 math iff both value inputs are
+    float32 (~1.5-2x faster, ~1e-5 relative error), float64 otherwise."""
+    both32 = np.asarray(A).dtype == np.float32 and np.asarray(B).dtype == np.float32
+    return np.float32 if both32 else np.float64
+
+
 def _pad_stack(series_list, dtype):
     """List of (n_i, dim) arrays -> (N, n_max, dim) zero-padded + lengths."""
     mats = [_as2d(s).astype(dtype, copy=False) for s in series_list]
@@ -230,12 +238,14 @@ def _pad_times(times_list, lens, dtype):
     return t_out
 
 
-def _batch_local_costs(X, L, degree, deg):
-    """(N, n_max, dim) padded -> (N, n_max+1) delete costs, masked by length.
+def _batch_local_costs(X, degree, deg):
+    """(N, n_max, dim) padded -> (N, n_max+1) local delete costs.
 
     Vectorized ``local_distance_kernel`` (``src/cuTWED_core.h:57-86``)
     across the whole batch at once — computed ONCE per series, reused by
-    every DP cell (optimization #3 in SURVEY.md §4).
+    every DP cell (optimization #3 in SURVEY.md §4). Entries past a
+    series' length are costs of its zero padding: the DP never reads
+    them on the way to cell (LA, LB), and sums over points must mask them.
     """
     N, n_max, _ = X.shape
     out = np.zeros((N, n_max + 1), dtype=X.dtype)
@@ -244,6 +254,22 @@ def _batch_local_costs(X, L, degree, deg):
     if n_max >= 2:
         out[:, 2:] = _pnorm(X[:, 1:] - X[:, :-1], degree, deg)
     return out
+
+
+def _delete_costs(X, T, nu, lamb, degree, deg):
+    """Delete-branch constants (lambda + nu*htrans + local cost), (N, n_max+1).
+
+    htrans is the signed time step, ``t_0`` for the first point
+    (``twed.c:179-181,190-192``).
+    """
+    D = _batch_local_costs(X, degree, deg)
+    D[:, 1:] += lamb
+    n = X.shape[1]
+    if nu != 0.0 and n >= 1:
+        D[:, 1] += nu * T[:, 0]
+        if n >= 2:
+            D[:, 2:] += nu * (T[:, 1:] - T[:, :-1])
+    return D
 
 
 def _match_costs_block(A, B, degree, deg):
@@ -292,23 +318,16 @@ def _match_costs_block(A, B, degree, deg):
     return p
 
 
-def _sweep_chunk(A, TA, LA, B, TB, LB, nu, lamb, degree, deg):
-    """Anti-diagonal DP over one chunk of pairs.
+def _match_plane(A, TA, B, TB, nu, degree, deg):
+    """Match costs of every cell, (P, R+1, C+1) (``twed.c:139-159`` analog).
 
-    A: (P, R, dim) float64 zero-padded; TA: (P, R); LA: (P,) lengths.
-    Returns (P,) distances.
-
-    Three rotating diagonal buffers of shape (P, R+1), indexed by row i
-    (the cell is (i, d-i)) — the linear-memory trick of
-    ``src/cuTWED_core.h:203-299`` vectorized over BOTH the diagonal axis
-    and the pair axis (``grid_evalZ``'s 2-D grid, ``cuTWED_core.h:317-363``).
+    ``M[i, j]`` is point term (i-1, j-1) plus lag term (i-2, j-2), each
+    root-norm + nu*|dt|; row 1 and column 1 carry no lag term.
+    In-place ops keep this to ~3 passes over the (P, R, C) plane —
+    the plane is the memory-bandwidth hot spot at high task counts.
     """
-    P, R, dim = A.shape
+    P, R, _ = A.shape
     C = B.shape[1]
-
-    # Precompute everything each DP cell reads (twed.c:103-159 analog).
-    # In-place ops keep this to ~3 passes over the (P, R, C) plane —
-    # the plane is the memory-bandwidth hot spot at high task counts.
     pow1 = _match_costs_block(A, B, degree, deg)  # (P, R, C) powered sums
     if degree >= 0:
         if deg == 2:
@@ -320,29 +339,65 @@ def _sweep_chunk(A, TA, LA, B, TB, LB, nu, lamb, degree, deg):
         t_pen *= nu
         pow1 += t_pen
         del t_pen
-    dt = A.dtype
-    M = np.zeros((P, R + 1, C + 1), dtype=dt)
+    M = np.zeros((P, R + 1, C + 1), dtype=A.dtype)
     M[:, 1:, 1:] = pow1
     M[:, 2:, 2:] += pow1[:, :-1, :-1]
-    del pow1
+    return M
 
-    # Delete-branch constants (lambda + nu*htrans + local cost), (P, R+1).
-    DiA = _batch_local_costs(A, LA, degree, deg)
-    DjB = _batch_local_costs(B, LB, degree, deg)
-    DiA[:, 1:] += lamb
-    DjB[:, 1:] += lamb
-    if nu != 0.0 and R >= 1:
-        DiA[:, 1] += nu * TA[:, 0]
-        if R >= 2:
-            DiA[:, 2:] += nu * (TA[:, 1:] - TA[:, :-1])
-    if nu != 0.0 and C >= 1:
-        DjB[:, 1] += nu * TB[:, 0]
-        if C >= 2:
-            DjB[:, 2:] += nu * (TB[:, 1:] - TB[:, :-1])
+
+def _diagonal_match(A, TA, B, TB, I, J, nu, degree, deg):
+    """Match costs of the cells (I, J) of one diagonal, (P, len(I)),
+    in :func:`_match_plane`'s term order but from direct differences
+    (``evalZ_kernel`` computing its cell costs on the fly,
+    ``src/cuTWED_core.h:142-152``)."""
+
+    def term(i, j):
+        t = _pnorm(A[:, i] - B[:, j], degree, deg)
+        if nu != 0.0:
+            t += nu * np.abs(TA[:, i] - TB[:, j])
+        return t
+
+    m = term(I - 1, J - 1)
+    lag = (I > 1) & (J > 1)
+    if lag.any():
+        m[:, lag] += term(I[lag] - 2, J[lag] - 2)
+    return m
+
+
+def _sweep_chunk(A, TA, LA, B, TB, LB, nu, lamb, degree, deg):
+    """Anti-diagonal DP over one chunk of pairs.
+
+    A: (P, R, dim) zero-padded; TA: (P, R); LA: (P,) lengths.
+    Returns (P,) distances.
+
+    Three rotating diagonal buffers of shape (P, R+1), indexed by row i
+    (the cell is (i, d-i)) — the linear-memory trick of
+    ``src/cuTWED_core.h:203-299`` vectorized over BOTH the diagonal axis
+    and the pair axis (``grid_evalZ``'s 2-D grid, ``cuTWED_core.h:317-363``).
+    Match costs come from the precomputed plane, or per diagonal
+    (O(R+C) extra memory) when the plane exceeds ``_STREAM_PLANE`` cells —
+    e.g. the reference's 10k x 20k ``test_large`` case.
+    """
+    P, R, _ = A.shape
+    C = B.shape[1]
+    if (R + 1) * (C + 1) > _STREAM_PLANE:
+
+        def match(I, J):
+            return _diagonal_match(A, TA, B, TB, I, J, nu, degree, deg)
+
+    else:
+        M = _match_plane(A, TA, B, TB, nu, degree, deg)
+
+        def match(I, J):
+            return M[:, I, J]
+
+    DiA = _delete_costs(A, TA, nu, lamb, degree, deg)
+    DjB = _delete_costs(B, TB, nu, lamb, degree, deg)
 
     # Rotating diagonal buffers + one scratch row (no per-diagonal
     # allocations: everything runs through out= into preallocated
     # slices — the linear-memory discipline of src/cuTWED_core.h:210-227).
+    dt = A.dtype
     D2 = np.full((P, R + 1), _INF, dtype=dt)
     D1 = np.full((P, R + 1), _INF, dtype=dt)
     D0 = np.full((P, R + 1), _INF, dtype=dt)
@@ -363,80 +418,12 @@ def _sweep_chunk(A, TA, LA, B, TB, LB, nu, lamb, degree, deg):
             I = rows[lo : hi + 1]
             J = d - I
             L = hi - lo + 1
-            keep = np.add(D2[:, lo - 1 : hi], M[:, I, J], out=scratch[:, :L])
+            keep = np.add(D2[:, lo - 1 : hi], match(I, J), out=scratch[:, :L])
             tgt = D0[:, lo : hi + 1]
             np.add(D1[:, lo - 1 : hi], DiA[:, I], out=tgt)  # delete-A
             np.minimum(keep, tgt, out=tgt)
             np.add(D1[:, lo : hi + 1], DjB[:, J], out=keep)  # delete-B
             np.minimum(keep, tgt, out=tgt)
-        hit = final_diag == d
-        if np.any(hit):
-            res[hit] = D0[hit, LA[hit]]
-    return res
-
-
-def _sweep_chunk_streaming(A, TA, LA, B, TB, LB, nu, lamb, degree, deg):
-    """Same sweep, but match costs computed per-diagonal (O(R+C) extra
-    memory instead of O(R*C)). Used when the DP plane would not fit —
-    e.g. the reference's 10k x 20k ``test_large`` case. Mirrors
-    ``evalZ_kernel`` computing its cell costs on the fly
-    (``src/cuTWED_core.h:142-152``)."""
-    P, R, dim = A.shape
-    C = B.shape[1]
-
-    DiA = _batch_local_costs(A, LA, degree, deg)
-    DjB = _batch_local_costs(B, LB, degree, deg)
-    DiA[:, 1:] += lamb
-    DjB[:, 1:] += lamb
-    if nu != 0.0 and R >= 1:
-        DiA[:, 1] += nu * TA[:, 0]
-        if R >= 2:
-            DiA[:, 2:] += nu * (TA[:, 1:] - TA[:, :-1])
-    if nu != 0.0 and C >= 1:
-        DjB[:, 1] += nu * TB[:, 0]
-        if C >= 2:
-            DjB[:, 2:] += nu * (TB[:, 1:] - TB[:, :-1])
-
-    dt = A.dtype
-    D2 = np.full((P, R + 1), _INF, dtype=dt)
-    D1 = np.full((P, R + 1), _INF, dtype=dt)
-    D0 = np.full((P, R + 1), _INF, dtype=dt)
-    res = np.full(P, _INF, dtype=dt)
-    final_diag = LA + LB
-    res[(LA == 0) & (LB == 0)] = 0.0
-
-    D0[:, 0] = 0.0
-    rows = np.arange(R + 1)
-    for d in range(1, R + C + 1):
-        D2, D1, D0 = D1, D0, D2
-        D0.fill(_INF)
-        lo = max(1, d - C)
-        hi = min(R, d - 1)
-        if lo <= hi:
-            I = rows[lo : hi + 1]
-            J = d - I
-            a1 = A[:, I - 1, :]
-            b1 = B[:, J - 1, :]
-            m = _root(np.sum(np.abs(a1 - b1) ** deg, axis=-1), degree, deg)
-            lag = (I > 1) & (J > 1)
-            if np.any(lag):
-                Il, Jl = I[lag] - 2, J[lag] - 2
-                m[:, lag] += _root(
-                    np.sum(np.abs(A[:, Il, :] - B[:, Jl, :]) ** deg, axis=-1),
-                    degree,
-                    deg,
-                )
-            if nu != 0.0:
-                ht = np.abs(TA[:, I - 1] - TB[:, J - 1])
-                if np.any(lag):
-                    ht[:, lag] += np.abs(TA[:, I[lag] - 2] - TB[:, J[lag] - 2])
-                m += nu * ht
-            keep = D2[:, lo - 1 : hi] + m
-            dela = D1[:, lo - 1 : hi] + DiA[:, I]
-            delb = D1[:, lo : hi + 1] + DjB[:, J]
-            np.minimum(keep, dela, out=keep)
-            np.minimum(keep, delb, out=keep)
-            D0[:, lo : hi + 1] = keep
         hit = final_diag == d
         if np.any(hit):
             res[hit] = D0[hit, LA[hit]]
@@ -453,7 +440,7 @@ def _sweep_chunk_streaming(A, TA, LA, B, TB, LB, nu, lamb, degree, deg):
 # efficiency 0.2 -> 0.83+). The Arrow batch size upstream is the outer
 # knob (SURVEY.md §4 optimization #4).
 _CHUNK_CELLS = 256 * 1024
-# Above this DP-plane size, stream costs per-diagonal instead.
+# Above this DP-plane size, _sweep_chunk computes match costs per diagonal.
 _STREAM_PLANE = 64 * 1024 * 1024
 # The reference's compiled point-dimension cap (src/cuTWED.cu:38) —
 # advisory here (see twed_pairs docstring), enforced there.
@@ -507,22 +494,10 @@ def twed_pairs(
     if deg == 0:
         raise ValueError("degree must be nonzero")
 
-    # Dtype dispatch (the reference's twed/twedf macro twins,
-    # src/cuTWED.cu:120-158): float32 batches compute in float32
-    # (~1.5-2x faster, ~1e-5 relative error), anything else in float64.
-    dt = (
-        np.float32
-        if A_pad.dtype == np.float32 and B_pad.dtype == np.float32
-        else np.float64
+    dt = _compute_dtype(A_pad, B_pad)
+    A_pad, TA_pad, B_pad, TB_pad = (
+        np.asarray(x, dtype=dt) for x in (A_pad, TA_pad, B_pad, TB_pad)
     )
-    if A_pad.dtype != dt:
-        A_pad = A_pad.astype(dt)
-    if B_pad.dtype != dt:
-        B_pad = B_pad.astype(dt)
-    if TA_pad.dtype != dt:
-        TA_pad = TA_pad.astype(dt)
-    if TB_pad.dtype != dt:
-        TB_pad = TB_pad.astype(dt)
 
     # Length-sorted processing: pairs are ordered by DP extent so each
     # chunk's padded plane is trimmed to ITS longest member instead of
@@ -544,7 +519,6 @@ def twed_pairs(
         rmax = int(max(la[head], 1))
         cmax = int(max(lb[head], 1))
         e = s
-        cells = 0
         while e < P:
             k = order[e]
             r_new = max(rmax, int(la[k]))
@@ -552,13 +526,11 @@ def twed_pairs(
             new_cells = (e - s + 1) * (r_new + 1) * (c_new + 1)
             if new_cells > _CHUNK_CELLS and e > s:
                 break
-            rmax, cmax, cells = r_new, c_new, new_cells
+            rmax, cmax = r_new, c_new
             e += 1
         sel = order[s:e]
         ia, ib = idxA[sel], idxB[sel]
-        plane = (rmax + 1) * (cmax + 1)
-        sweep = _sweep_chunk_streaming if plane > _STREAM_PLANE else _sweep_chunk
-        out[sel] = sweep(
+        out[sel] = _sweep_chunk(
             np.ascontiguousarray(A_pad[ia, :rmax]),
             np.ascontiguousarray(TA_pad[ia, :rmax]),
             LA[ia],
@@ -579,11 +551,7 @@ def twed(A, TA, B, TB, nu: float, lamb: float, degree: int = 2) -> float:
     (``cuTWED/cuTWED.py:37-88``): 1-D inputs auto-reshaped to (n, 1),
     lengths validated, float64 math, negative result impossible.
     """
-    dt = (
-        np.float32
-        if np.asarray(A).dtype == np.float32 and np.asarray(B).dtype == np.float32
-        else np.float64
-    )
+    dt = _compute_dtype(A, B)
     A_pad, LA = _pad_stack([A], dt)
     B_pad, LB = _pad_stack([B], dt)
     TA_pad = _pad_times([TA], LA, dt)
@@ -631,13 +599,7 @@ def twed_batch(AA, TAA, BB, TBB, nu: float, lamb: float, degree: int = 2, tri="n
     if tri != "nopt" and (AA.shape != BB.shape):
         raise ValueError("tri='tril'/'triu' requires a symmetric batch (AA.shape == BB.shape)")
 
-    dt = (
-        np.float32
-        if AA.dtype == np.float32 and BB.dtype == np.float32
-        else np.float64
-    )
-    A_pad = AA.astype(dt, copy=False)
-    B_pad = BB.astype(dt, copy=False)
+    dt = _compute_dtype(AA, BB)
     LA = np.full(nAA, nA, dtype=np.int64)
     LB = np.full(nBB, nB, dtype=np.int64)
 
@@ -649,6 +611,6 @@ def twed_batch(AA, TAA, BB, TBB, nu: float, lamb: float, degree: int = 2, tri="n
         ia, ib = np.tril_indices(nAA, k=-1)
     else:  # triu: compute tril of the transpose problem, then transpose back
         ib, ia = np.tril_indices(nAA, k=-1)
-    d = twed_pairs(A_pad, TAA, LA, ia, B_pad, TBB, LB, ib, nu, lamb, degree)
+    d = twed_pairs(AA, TAA, LA, ia, BB, TBB, LB, ib, nu, lamb, degree)
     res[ia, ib] = d
     return res

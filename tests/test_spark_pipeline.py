@@ -247,3 +247,20 @@ def test_partition_count_invariance(spark, corpus, result, num_partitions):
         tuple(r) for r in result.clusters.collect()
     }
     res.unpersist()
+
+
+def test_calibrated_cut_is_finite():
+    """The best-F1 cut is taken only at a finite score: an infinite cut
+    would turn every scored pair into an edge. Needs no Spark session."""
+    from cutwed_spark.plans.pipeline import _f1_curve
+
+    inf = np.inf
+    scores = np.array([0.2, 0.4, inf, inf, inf])
+    labels = np.array([True, False, True, True, True])
+    thr, _ = _f1_curve(scores, labels)
+    assert thr == pytest.approx(0.3)
+    # the best finite cut is the last finite score: no midpoint to inf
+    thr, _ = _f1_curve(np.array([0.2, inf]), np.array([True, True]))
+    assert thr == 0.2
+    with pytest.raises(ValueError):
+        _f1_curve(np.array([inf, np.nan]), np.array([True, False]))

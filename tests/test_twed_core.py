@@ -78,6 +78,39 @@ def test_golden_large():
     assert np.allclose(twed(A, TA, B, TB, NU, LAMB, DEG), GOLD_LARGE)
 
 
+@pytest.mark.parametrize("dtype", [np.float64, np.float32])
+@pytest.mark.parametrize("nu", [0.0, 0.05])
+@pytest.mark.parametrize("degree", [2, 1, 3, -2])
+def test_per_diagonal_costs_match_plane(monkeypatch, degree, nu, dtype):
+    """Match costs computed per diagonal (planes above _STREAM_PLANE)
+    give the plane path's distances on variable-length batches, and the
+    Marteau oracle's."""
+    from cutwed_spark.twed import core
+
+    rng = RandomState(7)
+    dim = 3
+    lens = np.array([0, 1, 2, 5, 9, 14])
+    V = np.zeros((len(lens), lens.max(), dim))
+    T = np.zeros((len(lens), lens.max()))
+    for k, n in enumerate(lens):
+        V[k, :n] = rng.randn(n, dim)
+        T[k, :n] = np.cumsum(rng.rand(n) * 2)
+    V, T = V.astype(dtype), T.astype(dtype)
+    ia, ib = (g.ravel() for g in np.meshgrid(np.arange(6), np.arange(6)))
+    args = (V, T, lens, ia, V, T, lens, ib, nu, 0.5, degree)
+    plane = core.twed_pairs(*args)
+    monkeypatch.setattr(core, "_STREAM_PLANE", 4)
+    diag = core.twed_pairs(*args)
+    ref = np.array([
+        twed_reference(V[i, : lens[i]], T[i, : lens[i]],
+                       V[j, : lens[j]], T[j, : lens[j]], nu, 0.5, degree)
+        for i, j in zip(ia, ib)
+    ])
+    rtol = 1e-12 if dtype == np.float64 else 1e-4
+    np.testing.assert_allclose(diag, plane, rtol=rtol, atol=rtol)
+    np.testing.assert_allclose(diag, ref, rtol=rtol, atol=rtol)
+
+
 @pytest.mark.slow
 def test_streaming_plane_100k_series():
     """~100k-point series end-to-end through the per-diagonal streaming
