@@ -264,7 +264,8 @@ def main(argv=None) -> int:
     pt.add_argument("--input", required=True, help="directory of parquet drops")
     pt.add_argument("--work", required=True, help="state/checkpoint work dir")
     pt.add_argument("--output", default=None, help="default <work>/out")
-    pt.add_argument("--threshold", type=float, default=0.35)
+    pt.add_argument("--threshold", type=float, default=None,
+                    help="match cut; default: finalize's label-free rule")
     pt.add_argument("--max-files", dest="max_files", type=int, default=None)
     pt.add_argument("--master", default=None)
     pt.add_argument("--shuffle-partitions", dest="shuffle_partitions", type=int,

@@ -29,7 +29,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -216,30 +215,3 @@ def score_candidates(
     joined = joined.sortWithinPartitions(F.greatest(F.size("ta"), F.size("tb")))
     return joined.mapInArrow(make_score_fn(dim, nu, lamb, degree), SCORE_SCHEMA)
 
-
-def twed_scalar_udf(dim: int, nu: float, lamb: float, degree: int = 2):
-    """Scalar pandas UDF over flat series buffers — the correctness/debug
-    path (SURVEY.md §2 row 1). Per-row packing (slow by design; use
-    score_candidates for throughput)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _twed(
-        va: pd.Series, ta: pd.Series, vb: pd.Series, tb: pd.Series
-    ) -> pd.Series:
-        from cutwed_spark.twed.core import twed as twed_scalar
-
-        out = np.empty(len(va), dtype=np.float64)
-        for k in range(len(va)):
-            out[k] = twed_scalar(
-                np.asarray(va.iloc[k], dtype=np.float64).reshape(-1, dim),
-                np.asarray(ta.iloc[k], dtype=np.float64),
-                np.asarray(vb.iloc[k], dtype=np.float64).reshape(-1, dim),
-                np.asarray(tb.iloc[k], dtype=np.float64),
-                nu,
-                lamb,
-                degree,
-            )
-        return pd.Series(out)
-
-    return _twed

@@ -6,10 +6,13 @@ transcripts -> assemble -> featurize -> block (MinHash/LSH + tool-sig)
 -> clusters + per-stage metrics, resumable from a score checkpoint.
 
 This is the Spark lifecycle equivalent of SURVEY.md §3.4. Each stage is
-an independent operator module; this file only sequences them, times
-them, and owns the checkpoint/resume protocol (Iceberg-style append +
-left_anti on restart — SURVEY.md §4 manual-engineering item c; plain
-parquet in this sandbox, the protocol is storage-agnostic).
+an independent operator module; this file maps a ``PipelineConfig`` onto
+the shared steps (``assemble_state``, ``score_new_pairs`` /
+``read_scored``, ``match_threshold``) that both ``run_pipeline`` and the
+streaming ingest call, sequences and times them, and owns the scored-log
+protocol (Iceberg-style append + left_anti on restart — SURVEY.md §4
+manual-engineering item c; plain parquet here, the protocol is
+storage-agnostic).
 """
 
 from __future__ import annotations
@@ -60,8 +63,8 @@ class PipelineConfig:
     degree: int = 2
     time_scale: float = 1.0 / 60.0
     # thresholding on twed_ratio = d(A,B) / (d(A,empty)+d(B,empty)) —
-    # length- and magnitude-invariant in (0, 1]; None -> calibrate
-    # against labeled pairs
+    # length- and magnitude-invariant in (0, 1]; None -> match_threshold
+    # calibrates on labeled pairs, else applies its label-free rule
     threshold: float | None = None
     score_col: str = "twed_ratio"
     # execution: salt is OPT-IN hot-key defense (costs an extra shuffle
@@ -100,19 +103,23 @@ def _f1_curve(scores: np.ndarray, labels: np.ndarray) -> tuple[float, float]:
     """Best (threshold, F1): predicted-match iff score <= threshold.
 
     Only finite scores are candidate cuts: an infinite cut would make
-    every scored pair an edge. Raises ValueError if no score is finite.
+    every scored pair an edge. A cut takes every pair of its score, so
+    it sits only at the last position of a run of tied scores — the F1
+    reported is the F1 the cut gives. Raises ValueError if no score is
+    finite.
     """
     order = np.argsort(scores, kind="stable")
     s, y = scores[order], labels[order].astype(np.int64)
     finite = np.isfinite(s)
     if not finite.any():
         raise ValueError("no labeled pair has a finite score to calibrate on")
+    run_end = np.append(s[1:] != s[:-1], True)
     tp = np.cumsum(y)
     fp = np.cumsum(1 - y)
     total_pos = int(y.sum())
     fn = total_pos - tp
     f1 = 2 * tp / np.maximum(2 * tp + fp + fn, 1)
-    k = int(np.argmax(np.where(finite, f1, -1.0)))
+    k = int(np.argmax(np.where(finite & run_end, f1, -1.0)))
     # threshold midway between the accepted score and the next one, if finite
     if k + 1 < len(s) and finite[k + 1]:
         thr = float((s[k] + s[k + 1]) / 2)
@@ -146,16 +153,24 @@ def calibrate_threshold(
     return _f1_curve(scores, labels)
 
 
-def unsupervised_threshold(scored: DataFrame, score_col: str) -> float:
-    """The cut when neither a threshold nor labels are given — one rule
-    for the batch pipeline and the stream epilogue. twed_ratio is
-    scale-free in (0, 1], so a fixed conservative 0.35 works without
-    labels and runs no job; any other score column has its own scale
-    and takes its 5th percentile (0.5 when nothing is scored)."""
-    if score_col == "twed_ratio":
-        return 0.35
-    q = scored.agg(F.expr(f"percentile_approx({score_col}, 0.05)")).collect()[0][0]
-    return 0.5 if q is None else float(q)
+def match_threshold(
+    scored: DataFrame, cfg: PipelineConfig, labeled: DataFrame | None = None
+) -> tuple[float, float | None]:
+    """The match cut on ``cfg.score_col`` and its calibration F1 (None
+    unless calibrated) — one rule for the batch pipeline and the stream
+    epilogue. A set ``cfg.threshold`` wins; else labeled pairs calibrate
+    the best-F1 cut. Without labels, twed_ratio is scale-free in (0, 1],
+    so a fixed conservative 0.35 works and runs no job; any other score
+    column has its own scale and takes its 5th percentile (0.5 when
+    nothing is scored)."""
+    if cfg.threshold is not None:
+        return float(cfg.threshold), None
+    if labeled is not None:
+        return calibrate_threshold(scored, labeled, cfg.score_col)
+    if cfg.score_col == "twed_ratio":
+        return 0.35, None
+    q = scored.agg(F.expr(f"percentile_approx({cfg.score_col}, 0.05)")).collect()[0][0]
+    return (0.5 if q is None else float(q)), None
 
 
 def evaluate_pairs(edges: DataFrame, labeled: DataFrame) -> dict:
@@ -178,8 +193,66 @@ def evaluate_pairs(edges: DataFrame, labeled: DataFrame) -> dict:
     return {"tp": tp, "fp": fp, "fn": fn, "precision": prec, "recall": rec, "f1": f1}
 
 
-def _score_checkpoint_path(checkpoint_dir: str) -> str:
-    return os.path.join(checkpoint_dir, "scores")
+def assemble_state(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Series + blocking signatures, one row per conversation: the STATE
+    table everything downstream derives from, in batch and per stream
+    microbatch alike (one aggregation tree: a single scan and shuffle,
+    no joins). localCheckpoint, not persist: every later
+    DataFrame would otherwise carry the whole assemble plan, and the
+    driver re-analyzes, re-canonicalizes (cache lookups) and re-prints
+    (SQL listener events) it on every derived frame and action —
+    measured on synth_corpus(500): 4.0 -> 1.5-2.0 s of driver JVM CPU
+    per warm batch run, and 420 -> 37 MB of driver-thread allocation per
+    microbatch candidate-plan build. Same rows; the blocks go when the
+    frame is garbage-collected, as for the CC loop's checkpoints."""
+    return assemble_with_signatures(
+        transcripts,
+        cfg.n_buckets,
+        cfg.max_turns,
+        bucket_scale=cfg.bucket_scale,
+        role_scale=cfg.role_scale,
+        num_hashes=cfg.num_hashes,
+        shingle_k=cfg.shingle_k,
+    ).localCheckpoint()
+
+
+def score_pairs(pairs: DataFrame, state: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """``score_candidates`` under ``cfg`` — the one mapping, salt and
+    partition count included."""
+    return score_candidates(
+        pairs,
+        state,
+        dim=cfg.dim,
+        nu=cfg.nu,
+        lamb=cfg.lamb,
+        degree=cfg.degree,
+        num_partitions=cfg.num_partitions,
+        salt=cfg.salt,
+        time_scale=cfg.time_scale,
+        transfer_dtype=cfg.transfer_dtype,
+    )
+
+
+_PAIR = ["conv_id_a", "conv_id_b"]
+
+
+def score_new_pairs(
+    pairs: DataFrame, state: DataFrame, cfg: PipelineConfig, log_dir: str
+) -> None:
+    """Score the pairs not yet in the append-only scored log at
+    ``log_dir`` and append them — the one resume protocol of a batch
+    restart and a stream microbatch. A rerun after a crash anti-joins
+    what the log already holds; rows a crash left twice are absorbed by
+    ``read_scored``."""
+    if os.path.isdir(log_dir):
+        done = pairs.sparkSession.read.parquet(log_dir).select(*_PAIR)
+        pairs = pairs.join(done, _PAIR, "left_anti")
+    score_pairs(pairs, state, cfg).write.mode("append").parquet(log_dir)
+
+
+def read_scored(spark: SparkSession, log_dir: str) -> DataFrame:
+    """The scored log at ``log_dir``, one row per pair."""
+    return spark.read.parquet(log_dir).dropDuplicates(_PAIR)
 
 
 def run_pipeline(
@@ -221,26 +294,7 @@ def run_pipeline(
     transcripts = transcripts.repartition(n_part, "conv_id")
 
     with stage("assemble"):
-        # series + blocking signatures = the STATE table (one row per
-        # conversation); everything downstream derives from it, which is
-        # what makes the incremental/streaming path possible. One
-        # aggregation tree: single scan, single shuffle, zero joins.
-        # localCheckpoint, not persist: every later DataFrame would
-        # otherwise carry the whole assemble plan, and the driver
-        # re-analyzes, re-canonicalizes (cache lookups) and re-prints
-        # (SQL listener events) it on every derived frame and action —
-        # measured 4.0 -> 1.5-2.0 s of driver JVM CPU per warm run on
-        # synth_corpus(500). Same rows; the blocks go when the frame is
-        # garbage-collected, as for the CC loop's checkpoints.
-        series = assemble_with_signatures(
-            transcripts,
-            cfg.n_buckets,
-            cfg.max_turns,
-            bucket_scale=cfg.bucket_scale,
-            role_scale=cfg.role_scale,
-            num_hashes=cfg.num_hashes,
-            shingle_k=cfg.shingle_k,
-        ).localCheckpoint()
+        series = assemble_state(transcripts, cfg)
         metrics["assembly"] = {
             k: (float(v) if v is not None else None)
             for k, v in assembly_stats(series).collect()[0].asDict().items()
@@ -263,48 +317,20 @@ def run_pipeline(
         pairs = pairs.persist()
         metrics["n_candidate_pairs"] = pairs.count()
 
-    prior = None
-    ckpt = _score_checkpoint_path(checkpoint_dir) if checkpoint_dir else None
-    if ckpt and os.path.isdir(ckpt):
-        with stage("resume_antijoin"):
-            prior = spark.read.parquet(ckpt)
-            pairs = pairs.join(
-                prior.select("conv_id_a", "conv_id_b"),
-                ["conv_id_a", "conv_id_b"],
-                "left_anti",
-            )
-
     with stage("score"):
-        scored_new = score_candidates(
-            pairs,
-            series,
-            dim=cfg.dim,
-            nu=cfg.nu,
-            lamb=cfg.lamb,
-            degree=cfg.degree,
-            num_partitions=cfg.num_partitions,
-            salt=cfg.salt,
-            time_scale=cfg.time_scale,
-            transfer_dtype=cfg.transfer_dtype,
-        )
-        if ckpt:
-            scored_new.write.mode("append").parquet(ckpt)
-            scored = spark.read.parquet(ckpt).dropDuplicates(
-                ["conv_id_a", "conv_id_b"]
-            )
+        if checkpoint_dir:
+            log_dir = os.path.join(checkpoint_dir, "scores")
+            score_new_pairs(pairs, series, cfg, log_dir)
+            scored = read_scored(spark, log_dir)
         else:
-            scored = scored_new
+            scored = score_pairs(pairs, series, cfg)
         scored = scored.persist()
         metrics["n_scored_pairs"] = scored.count()
 
     with stage("threshold"):
-        if cfg.threshold is not None:
-            threshold = float(cfg.threshold)
-        elif labeled is not None:
-            threshold, cal_f1 = calibrate_threshold(scored, labeled, cfg.score_col)
+        threshold, cal_f1 = match_threshold(scored, cfg, labeled)
+        if cal_f1 is not None:
             metrics["calibration_f1"] = cal_f1
-        else:
-            threshold = unsupervised_threshold(scored, cfg.score_col)
         edges = scored.where(F.col(cfg.score_col) <= F.lit(threshold))
         metrics["threshold"] = threshold
         metrics["n_match_edges"] = edges.count()

@@ -24,9 +24,12 @@ expects. Clustering stays a batch job over the
 accumulated edges (``finalize``) — connected components is iterative
 and belongs outside the stream.
 
-The foreachBatch body is idempotent per batch id in the usual Spark
-sense: the stream checkpoint prevents reprocessing, and candidate
-generation anti-joins pairs already scored.
+The foreachBatch body calls the batch pipeline's stage functions
+(``assemble_state``, ``score_new_pairs``; ``finalize`` adds
+``read_scored`` and ``match_threshold``) and keeps only the block-key
+index join, the version marker and the write order. It is idempotent
+per batch id in the usual Spark sense: the stream checkpoint prevents
+reprocessing, and ``score_new_pairs`` skips pairs the scored log holds.
 """
 
 from __future__ import annotations
@@ -37,15 +40,19 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cutwed_spark.operators.assemble import assemble_with_signatures
 from cutwed_spark.operators.blocking import (
     SIGNATURE_FAMILY_VERSION,
     block_keys_from_state,
     length_filter_pairs,
 )
 from cutwed_spark.operators.clustering import assign_clusters
-from cutwed_spark.operators.scoring import score_candidates
-from cutwed_spark.plans.pipeline import PipelineConfig, unsupervised_threshold
+from cutwed_spark.plans.pipeline import (
+    PipelineConfig,
+    assemble_state,
+    match_threshold,
+    read_scored,
+    score_new_pairs,
+)
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -141,20 +148,7 @@ def incremental_candidates(
 def _incremental_batch(
     spark: SparkSession, batch_df: DataFrame, cfg: PipelineConfig, p: dict
 ) -> None:
-    new_state = assemble_with_signatures(
-        batch_df,
-        cfg.n_buckets,
-        cfg.max_turns,
-        bucket_scale=cfg.bucket_scale,
-        role_scale=cfg.role_scale,
-        num_hashes=cfg.num_hashes,
-        shingle_k=cfg.shingle_k,
-    ).localCheckpoint()
-    # localCheckpoint, not persist: the batch's frames (block keys,
-    # candidates, scoring) would otherwise each carry the assemble plan
-    # through analysis, as in run_pipeline's state table — measured
-    # 420 -> 37 MB of driver-thread allocation per candidate-plan build
-    # on synth_corpus(500).
+    new_state = assemble_state(batch_df, cfg)
     if new_state.isEmpty():
         return
     # The guard writes the marker into a fresh dir, so it lands BEFORE
@@ -168,12 +162,6 @@ def _incremental_batch(
 
     cand, new_keys = incremental_candidates(spark, new_state, p, cfg)
     new_keys = new_keys.persist()
-    if os.path.isdir(p["scored"]):
-        prior = spark.read.parquet(p["scored"]).select(
-            "conv_id_a", "conv_id_b"
-        )
-        cand = cand.join(prior, ["conv_id_a", "conv_id_b"], "left_anti")
-
     # Scoring still reads the state table — candidate pairs need the
     # OLD side's series payload. That is a payload fetch (column-
     # pruned, join-filtered), not a recompute.
@@ -185,16 +173,6 @@ def _incremental_batch(
     if cfg.length_ratio_max is not None:
         # the same comparison cleaning run_pipeline's blocking applies
         cand = length_filter_pairs(cand, full, cfg.length_ratio_max)
-    scored = score_candidates(
-        cand,
-        full,
-        dim=cfg.dim,
-        nu=cfg.nu,
-        lamb=cfg.lamb,
-        degree=cfg.degree,
-        time_scale=cfg.time_scale,
-        transfer_dtype=cfg.transfer_dtype,
-    )
     # Write order is the crash-safety contract: scored -> keys ->
     # state. The stream checkpoint commits only after this function
     # returns, so a crash replays the whole batch; the replay is
@@ -202,7 +180,7 @@ def _incremental_batch(
     # anti-joined away, replayed key rows are absorbed by the
     # distinct-count pruning and pair-level dropDuplicates, and the
     # state append is guarded by a conv_id anti-join below).
-    scored.write.mode("append").parquet(p["scored"])
+    score_new_pairs(cand, full, cfg, p["scored"])
     new_keys.write.mode("append").parquet(p["keys"])
     state_rows = new_state
     if have_state:
@@ -389,20 +367,14 @@ def finalize(
     cfg: PipelineConfig | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Batch epilogue over the accumulated stream state: threshold the
-    scored edges and run connected components over the state dir's
-    conv_ids. Streaming has no labeled calibration, so without
-    ``cfg.threshold`` the cut is ``unsupervised_threshold`` — the same
-    rule ``run_pipeline`` applies. Returns (edges, clusters)."""
+    scored log and run connected components over the state dir's
+    conv_ids. Streaming has no labeled calibration, so the cut is
+    ``match_threshold`` without labels — the same rule ``run_pipeline``
+    applies. Returns (edges, clusters)."""
     cfg = cfg or PipelineConfig()
     p = _paths(work_dir)
-    scored = spark.read.parquet(p["scored"]).dropDuplicates(
-        ["conv_id_a", "conv_id_b"]
-    )
-    thr = (
-        cfg.threshold
-        if cfg.threshold is not None
-        else unsupervised_threshold(scored, cfg.score_col)
-    )
+    scored = read_scored(spark, p["scored"])
+    thr, _ = match_threshold(scored, cfg)
     edges = scored.where(F.col(cfg.score_col) <= F.lit(thr))
     state = spark.read.parquet(p["state"])
     clusters, _ = assign_clusters(

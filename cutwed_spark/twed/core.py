@@ -213,31 +213,6 @@ def _compute_dtype(A, B) -> type:
     return np.float32 if both32 else np.float64
 
 
-def _pad_stack(series_list, dtype):
-    """List of (n_i, dim) arrays -> (N, n_max, dim) zero-padded + lengths."""
-    mats = [_as2d(s).astype(dtype, copy=False) for s in series_list]
-    dims = {m.shape[1] for m in mats}
-    if len(dims) > 1:
-        raise ValueError(f"all series must share dim; got {sorted(dims)}")
-    dim = dims.pop() if dims else 1
-    lens = np.array([m.shape[0] for m in mats], dtype=np.int64)
-    n_max = int(lens.max()) if len(lens) else 0
-    out = np.zeros((len(mats), n_max, dim), dtype=dtype)
-    for k, m in enumerate(mats):
-        out[k, : m.shape[0]] = m
-    return out, lens
-
-
-def _pad_times(times_list, lens, dtype):
-    t_out = np.zeros((len(times_list), int(lens.max()) if len(lens) else 0), dtype=dtype)
-    for k, t in enumerate(times_list):
-        t = np.asarray(t, dtype=dtype).ravel()
-        if t.shape[0] != lens[k]:
-            raise ValueError("timestamp length must match series length")
-        t_out[k, : t.shape[0]] = t
-    return t_out
-
-
 def _batch_local_costs(X, degree, deg):
     """(N, n_max, dim) padded -> (N, n_max+1) local delete costs.
 
@@ -549,16 +524,24 @@ def twed_pairs(
 def twed(A, TA, B, TB, nu: float, lamb: float, degree: int = 2) -> float:
     """Single-pair TWED, reference-equivalent public API
     (``cuTWED/cuTWED.py:37-88``): 1-D inputs auto-reshaped to (n, 1),
-    lengths validated, float64 math, negative result impossible.
+    dims and lengths validated, negative result impossible.
     """
     dt = _compute_dtype(A, B)
-    A_pad, LA = _pad_stack([A], dt)
-    B_pad, LB = _pad_stack([B], dt)
-    TA_pad = _pad_times([TA], LA, dt)
-    TB_pad = _pad_times([TB], LB, dt)
+    A, B = _as2d(A).astype(dt, copy=False), _as2d(B).astype(dt, copy=False)
+    if A.shape[1] != B.shape[1]:
+        raise ValueError(f"A and B must share dim; got {A.shape[1]} and {B.shape[1]}")
+    TA = np.asarray(TA, dtype=dt).ravel()
+    TB = np.asarray(TB, dtype=dt).ravel()
+    if TA.shape[0] != A.shape[0] or TB.shape[0] != B.shape[0]:
+        raise ValueError(
+            f"timestamp length must match series length; got TA {TA.shape[0]} "
+            f"for {A.shape[0]} points, TB {TB.shape[0]} for {B.shape[0]}"
+        )
+    LA = np.array([A.shape[0]], dtype=np.int64)
+    LB = np.array([B.shape[0]], dtype=np.int64)
     z = np.zeros(1, dtype=np.int64)
     return float(
-        twed_pairs(A_pad, TA_pad, LA, z, B_pad, TB_pad, LB, z, nu, lamb, degree)[0]
+        twed_pairs(A[None], TA[None], LA, z, B[None], TB[None], LB, z, nu, lamb, degree)[0]
     )
 
 
@@ -593,8 +576,15 @@ def twed_batch(AA, TAA, BB, TBB, nu: float, lamb: float, degree: int = 2, tri="n
         raise ValueError("batch input must be (nA, n) or (nA, n, dim)")
     TAA = np.asarray(TAA, dtype=np.float64)
     TBB = np.asarray(TBB, dtype=np.float64)
-    nAA, nA, _ = AA.shape
-    nBB, nB, _ = BB.shape
+    nAA, nA, dim = AA.shape
+    nBB, nB, dimB = BB.shape
+    if dim != dimB:
+        raise ValueError(f"AA and BB must share dim; got {dim} and {dimB}")
+    if TAA.shape != (nAA, nA) or TBB.shape != (nBB, nB):
+        raise ValueError(
+            f"timestamps must be (n_series, n_points) like their series; got "
+            f"TAA {TAA.shape} for {(nAA, nA)}, TBB {TBB.shape} for {(nBB, nB)}"
+        )
     tri = _norm_tri(tri)
     if tri != "nopt" and (AA.shape != BB.shape):
         raise ValueError("tri='tril'/'triu' requires a symmetric batch (AA.shape == BB.shape)")

@@ -162,7 +162,7 @@ def test_stream_honours_length_ratio_max(spark, split_corpus, tmp_path):
     assert too_long.count() == 0
 
 
-def test_finalize_unsupervised_threshold_follows_score_col(spark, split_corpus):
+def test_finalize_label_free_threshold_follows_score_col(spark, split_corpus):
     """Without a threshold, finalize cuts twed_norm at its own 5th
     percentile (run_pipeline's rule), not at twed_ratio's fixed 0.35."""
     in_dir, work_dir, _, _ = split_corpus

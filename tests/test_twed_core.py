@@ -283,10 +283,38 @@ def test_symmetry_and_identity():
     assert twed(A, TA, A, TA, NU, LAMB, DEG) <= 1e-6
 
 
-def test_degree_zero_rejected():
+def _malformed_cases():
+    """Inputs the reference's checks refuse (cuTWED/cuTWED.py:47-66): a
+    zero degree, series of different dims, timestamps that do not match
+    their series' points."""
     A, TA, B, TB = sine_fixture(5)
-    with pytest.raises(ValueError):
-        twed(A, TA, B, TB, NU, LAMB, 0)
+    A2, B3 = RandomState(0).randn(3, 2), RandomState(1).randn(4, 3)
+    AA, TT = RandomState(2).randn(2, 3), np.tile(np.arange(3.0), (2, 1))
+    AA2 = np.stack([AA, AA], axis=2)
+    case = pytest.param
+    return [
+        case(lambda: twed(A, TA, B, TB, NU, LAMB, 0), "degree", id="degree-zero"),
+        case(lambda: twed(A2, np.arange(3.0), B3, np.arange(4.0), NU, LAMB, 3), "dim",
+             id="dim-mismatch"),
+        case(lambda: twed(A, TA[:-1], B, TB, NU, LAMB, DEG), "timestamp", id="short-times"),
+        case(lambda: twed(A, TA, B, np.append(TB, 99.0), NU, LAMB, DEG), "timestamp",
+             id="long-times"),
+        case(lambda: twed_batch(AA2, TT, AA, TT, NU, LAMB), "dim", id="batch-dim-mismatch"),
+        case(lambda: twed_batch(AA, np.zeros((2, 4)), AA, TT, NU, LAMB), "timestamps",
+             id="batch-extra-times"),
+        case(lambda: twed_batch(AA, TT, AA, TT[:, :2], NU, LAMB), "timestamps",
+             id="batch-short-times"),
+        case(lambda: twed_batch(AA, TT[:1], AA, TT, NU, LAMB), "timestamps",
+             id="batch-series-count"),
+    ]
+
+
+@pytest.mark.parametrize("call, message", _malformed_cases())
+def test_malformed_input_rejected(call, message):
+    """Malformed input raises a ValueError naming the problem instead of
+    computing on silently dropped coordinates or timestamps."""
+    with pytest.raises(ValueError, match=message):
+        call()
 
 
 # ----------------------------------------------------------------------
