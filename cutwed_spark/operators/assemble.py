@@ -24,6 +24,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cutwed_spark.operators.blocking import (
+    DEFAULT_WORD_NUM_HASHES,
+    per_turn_member_mins,
+    shingle_hashes_from_word_hashes,
+    signature_from_mins,
+    word_hash_sql,
+)
 from cutwed_spark.operators.featurize import DEFAULT_BUCKETS, with_turn_features
 
 
@@ -76,7 +83,7 @@ def assemble_with_signatures(
     role_scale: float = 3.0,
     num_hashes: int = 32,
     shingle_k: int = 3,
-    word_num_hashes: int = 8,
+    word_num_hashes: int = DEFAULT_WORD_NUM_HASHES,
     short_conv_turns: int = 8,
 ) -> DataFrame:
     """-> the conversation STATE table (conv_id, n_turns, n_truncated,
@@ -112,13 +119,6 @@ def assemble_with_signatures(
     collect+sort aggregation dominate, not the duplicate word hashing,
     so featurize keeps its own independent tree.
     """
-    from cutwed_spark.operators.blocking import (
-        per_turn_member_mins,
-        shingle_hashes_from_word_hashes,
-        signature_from_mins,
-        word_hash_sql,
-    )
-
     feat = with_turn_features(
         transcripts, n_buckets, bucket_scale=bucket_scale, role_scale=role_scale
     )

@@ -34,6 +34,9 @@ DEFAULT_NUM_HASHES = 32
 DEFAULT_BAND_SIZE = 2
 DEFAULT_SHINGLE_K = 3
 DEFAULT_MAX_BLOCK = 64
+# word-minhash width: the wsig length assemble writes and the number of
+# single-row word bands blocking reads back
+DEFAULT_WORD_NUM_HASHES = 8
 
 # Bump when the signature hash family changes (shingle base hash or
 # member derivation): signatures from different families NEVER collide
@@ -147,66 +150,67 @@ def lsh_block_keys(
     return signatures.selectExpr("conv_id", f"explode(array({bands})) AS block_key")
 
 
-def prune_oversized_blocks(
-    blocks: DataFrame, max_block: int = DEFAULT_MAX_BLOCK
+def cap_blocks(
+    keys: DataFrame, key: str, id_col: str, max_size: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Split blocks into (kept, block_stats).
+    """The one hot-block cap: ``keys`` (``id_col``, ``key``) ->
+    (kept, stats).
 
-    A block of size s generates s*(s-1)/2 pairs; blocks above
-    ``max_block`` are almost always non-discriminative boilerplate and
-    are the skew bombs at scale. They are dropped here and REPORTED in
-    block_stats (n_blocks, n_dropped_blocks, max size, pairs estimate).
-    """
-    # One pass: sized is tiny (one row per block key) — persist it so
-    # the stats agg, the keep-keys broadcast, and the candidate join do
-    # NOT each recompute the shingle/minhash subtree. Scoped: released
-    # by an enclosing cache.cache_scope() (the pipeline wraps its run).
+    A block's size is its number of DISTINCT ids, so a replayed stream
+    batch (index rows appended twice) cannot push a key past the cap.
+    Only blocks with 2 <= size <= ``max_size`` are kept: a block of size
+    s generates s*(s-1)/2 pairs, blocks above the cap are almost always
+    non-discriminative boilerplate (the skew bombs at scale), and
+    singletons — most keys on the bench corpus — produce no pair but
+    would ride through the self-join. The drop is REPORTED, never
+    silent: stats is one row (n_blocks, n_dropped_blocks,
+    max_block_size, est_candidate_pairs).
+
+    The size table (one row per key) feeds the stats and the kept-keys
+    join, so it is persisted; scoped, an enclosing cache_scope releases
+    it. No broadcast hint: the kept-key set is unbounded at corpus
+    scale, and AQE picks the join strategy from runtime sizes."""
     sized = scoped_persist(
-        blocks.groupBy("block_key").agg(F.count(F.lit(1)).alias("block_size"))
+        keys.groupBy(key).agg(F.count_distinct(id_col).alias("block_size"))
     )
+    size = F.col("block_size")
     stats = sized.agg(
         F.count(F.lit(1)).alias("n_blocks"),
-        F.sum(F.when(F.col("block_size") > max_block, 1).otherwise(0)).alias(
-            "n_dropped_blocks"
-        ),
-        F.max("block_size").alias("max_block_size"),
-        F.sum(
-            F.when(
-                F.col("block_size") <= max_block,
-                F.col("block_size") * (F.col("block_size") - 1) / 2,
-            ).otherwise(0)
-        ).cast("long").alias("est_candidate_pairs"),
+        F.sum(F.when(size > max_size, 1).otherwise(0)).alias("n_dropped_blocks"),
+        F.max(size).alias("max_block_size"),
+        F.sum(F.when(size <= max_size, size * (size - 1) / 2).otherwise(0))
+        .cast("long")
+        .alias("est_candidate_pairs"),
     )
-    # Keep only keys that can PRODUCE pairs: 2 <= size <= max_block.
-    # Dropping singleton blocks up front is a large shuffle cut — most
-    # keys are singletons (measured ~80% on the bench corpus: unique
-    # turn-text fingerprints, discriminative LSH bands), and they would
-    # otherwise ride through the pair self-join contributing nothing.
-    # No broadcast hint (the kept-key set is unbounded at corpus
-    # scale); AQE picks the join strategy from runtime sizes.
-    pair_keys = sized.where(
-        (F.col("block_size") >= 2) & (F.col("block_size") <= max_block)
-    ).select("block_key")
-    kept = blocks.join(pair_keys, "block_key")
+    kept = keys.join(sized.where((size >= 2) & (size <= max_size)).select(key), key)
     return kept, stats
 
 
-def candidate_pairs(blocks: DataFrame) -> DataFrame:
-    """Self-join block table on block_key -> deduped ordered pairs.
+def block_pairs(
+    kept: DataFrame, key: str, id_col: str, new_ids: DataFrame | None = None
+) -> DataFrame:
+    """Self-join a block table on ``key`` -> deduped ordered pairs
+    (``{id_col}_a`` < ``{id_col}_b``).
 
-    The ``conv_id_a < conv_id_b`` predicate is the reference's TRIL
-    optimization (/root/reference/src/cuTWED_core.h:598-600) expressed
-    declaratively; Catalyst pushes it into the join. Multi-band hits
-    are collapsed by dropDuplicates (the reference's
-    dropDuplicates-after-union analog, SURVEY.md §2.2 "Distinct").
-    """
-    left = blocks.select(F.col("block_key"), F.col("conv_id").alias("conv_id_a"))
-    right = blocks.select(F.col("block_key"), F.col("conv_id").alias("conv_id_b"))
+    With ``new_ids`` one side is restricted to those ids (a stream
+    microbatch: old-x-old pairs are structurally impossible, so the cost
+    is ~ new x neighborhood), and ``least``/``greatest`` order the ids.
+    Without it the ``l < r`` predicate is the reference's TRIL
+    optimization (cuTWED_core.h:598-600 in the reference) pushed into
+    the join, halving its output. Multi-band hits are collapsed by
+    dropDuplicates (SURVEY.md §2.2 "Distinct")."""
+    right = kept if new_ids is None else kept.join(new_ids, id_col, "left_semi")
+    left_id, right_id = F.col(f"l.{id_col}"), F.col(f"r.{id_col}")
+    order = left_id < right_id if new_ids is None else left_id != right_id
+    a, b = f"{id_col}_a", f"{id_col}_b"
     return (
-        left.join(right, "block_key")
-        .where(F.col("conv_id_a") < F.col("conv_id_b"))
-        .select("conv_id_a", "conv_id_b")
-        .dropDuplicates(["conv_id_a", "conv_id_b"])
+        kept.alias("l")
+        .join(right.alias("r"), key)
+        .where(order)
+        .select(
+            F.least(left_id, right_id).alias(a), F.greatest(left_id, right_id).alias(b)
+        )
+        .dropDuplicates([a, b])
     )
 
 
@@ -214,7 +218,7 @@ def block_keys_from_state(
     state: DataFrame,
     band_size: int = DEFAULT_BAND_SIZE,
     num_hashes: int = DEFAULT_NUM_HASHES,
-    word_num_hashes: int = 8,
+    word_num_hashes: int = DEFAULT_WORD_NUM_HASHES,
 ) -> DataFrame:
     """All four blocking axes derived purely from the state table
     (conv_id, sig, wsig, tool_sig, text_hashes):
@@ -301,8 +305,8 @@ def build_candidate_pairs_from_state(
         block_keys_from_state(state, band_size, num_hashes)
         .repartition("block_key")
     )
-    kept, stats = prune_oversized_blocks(blocks, max_block)
-    pairs = candidate_pairs(kept)
+    kept, stats = cap_blocks(blocks, "block_key", "conv_id", max_block)
+    pairs = block_pairs(kept, "block_key", "conv_id")
     if length_ratio_max is not None:
         pairs = length_filter_pairs(pairs, state, length_ratio_max)
     return pairs, stats

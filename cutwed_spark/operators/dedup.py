@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cutwed_spark.cache import scoped_persist
+from cutwed_spark.operators.blocking import block_pairs
 
 
 def normalized_text(col: str = "text"):
@@ -197,17 +198,9 @@ def _minhash_band_pairs(
     sh: DataFrame, num_hashes: int, band_size: int
 ) -> DataFrame:
     """(doc_id, shingle) -> banded MinHash candidate pairs
-    (doc_id_a < doc_id_b)."""
-    keys = _band_keys(sh, num_hashes, band_size)
-    return (
-        keys.alias("l")
-        .join(keys.alias("r"), "band_key")
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
-        .select(
-            F.col("l.doc_id").alias("doc_id_a"), F.col("r.doc_id").alias("doc_id_b")
-        )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
-    )
+    (doc_id_a < doc_id_b). No band-size cap: the contract defines none
+    (``max_df`` thins frequent shingles upstream instead)."""
+    return block_pairs(_band_keys(sh, num_hashes, band_size), "band_key", "doc_id")
 
 
 def minhash_lsh_pairs(

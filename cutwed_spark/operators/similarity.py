@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cutwed_spark.cache import scoped_persist
+from cutwed_spark.operators.blocking import cap_blocks
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -240,26 +241,6 @@ def suggest_n_planes(n_rows: int, target_bucket: int = 256) -> int:
     return int(min(max(p, 4), 30))
 
 
-def lsh_bucket_stats(buckets: DataFrame, max_bucket: int) -> DataFrame:
-    """One-row profile of an LSH bucketing (mirrors
-    blocking.prune_oversized_blocks' cap-and-report contract):
-    (n_buckets, n_dropped_buckets, max_bucket_size, est_candidate_pairs)."""
-    sized = buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("bucket_size"))
-    return sized.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(F.when(F.col("bucket_size") > max_bucket, 1).otherwise(0)).alias(
-            "n_dropped_buckets"
-        ),
-        F.max("bucket_size").alias("max_bucket_size"),
-        F.sum(
-            F.when(
-                F.col("bucket_size") <= max_bucket,
-                F.col("bucket_size") * (F.col("bucket_size") - 1) / 2,
-            ).otherwise(0)
-        ).cast("long").alias("est_candidate_pairs"),
-    )
-
-
 def lsh_cosine_topk(
     emb: DataFrame,
     dim: int,
@@ -277,12 +258,11 @@ def lsh_cosine_topk(
     count gives O(n^2 / 2^n_planes) bucket self-joins as n grows —
     and raise recall with ``n_tables`` independent tables (a pair
     colliding with probability p per table is found in >= 1 of L with
-    probability 1-(1-p)^L, at L x the join cost). Buckets above
-    ``max_bucket`` rows (hash-collision pile-ups / degenerate
-    embeddings) are dropped before the self-join — the same
-    cap-and-report treatment blocking applies to LSH blocks; profile
-    the drop with ``lsh_bucket_stats`` on ``lsh_bucket_ids`` output.
-    Vectors in a dropped bucket get no neighbors from that bucket
+    probability 1-(1-p)^L, at L x the join cost). Buckets of more than
+    ``max_bucket`` vectors (hash-collision pile-ups / degenerate
+    embeddings) are dropped before the self-join by blocking's
+    ``cap_blocks``, whose stats on ``lsh_bucket_ids`` output report the
+    drop. Vectors in a dropped bucket get no neighbors from that bucket
     (recall cost, surfaced, never a 2^2*max_bucket^2 pair explosion).
     """
     from pyspark.sql.window import Window
@@ -291,8 +271,8 @@ def lsh_cosine_topk(
         F.col(id_col), "embedding", _norm(F.col("embedding")).alias("nrm")
     )
     # Persisted: `ids` (compact — id + bucket) encodes the expensive
-    # n_planes*n_tables hyperplane dot products and feeds the oversized
-    # profile plus BOTH self-join sides. The array-bearing `bucketed`
+    # n_planes*n_tables hyperplane dot products and feeds the bucket
+    # cap plus BOTH self-join sides. The array-bearing `bucketed`
     # table is deliberately NOT persisted: materializing the vector
     # payload costs more than recomputing the parquet scan (A/B at
     # sf0.1: 12.1 s persisted vs 7.8 s with ids-only vs 9.8 s with no
@@ -302,13 +282,7 @@ def lsh_cosine_topk(
         if n_tables == 1
         else lsh_bucket_ids_multi(emb, dim, n_planes, n_tables, id_col)
     )
-    oversized = (
-        ids.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .where(F.col("bucket_size") > max_bucket)
-        .select("bucket")
-    )
-    ids = ids.join(oversized, "bucket", "left_anti")
+    ids, _ = cap_blocks(ids, "bucket", id_col, max_bucket)
     bucketed = e.join(ids, id_col)
     a = bucketed.select(
         F.col("bucket"),
@@ -538,13 +512,7 @@ def embedding_near_dup_pairs_lsh(
     # never the array-bearing join — see lsh_cosine_topk's A/B note;
     # cache_scope() releases
     ids = scoped_persist(lsh_bucket_ids(emb, dim, n_planes, id_col))
-    oversized = (
-        ids.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .where(F.col("bucket_size") > max_bucket)
-        .select("bucket")
-    )
-    ids = ids.join(oversized, "bucket", "left_anti")
+    ids, _ = cap_blocks(ids, "bucket", id_col, max_bucket)
     bucketed = e.join(ids, id_col)
     a = bucketed.select(
         "bucket",

@@ -28,8 +28,9 @@ Batch and stream agree on band collisions and Jaccards because both
 call the same code: band keys and verification are the batch
 operators' ``_band_keys`` and ``_verified_pairs`` (operators/dedup.py),
 and the band-index join is ER ingest's ``_index_join_pairs``
-(streaming/ingest.py); ``tests/test_streaming_dedup.py`` pins the
-parity.
+(streaming/ingest.py), whose pair self-join is the batch operators'
+``block_pairs`` (operators/blocking.py) with the one hot-band cap,
+``cap_blocks``; ``tests/test_streaming_dedup.py`` pins the parity.
 
 Per-batch cost ~ O(batch + touched neighborhood + touched buckets),
 never O(corpus). The stream checkpoint provides exactly-once batch
@@ -44,6 +45,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cutwed_spark.cache import cache_scope, scoped_persist
 from cutwed_spark.operators.dedup import (
     _band_keys,
     _verified_pairs,
@@ -73,6 +75,10 @@ def _bucket(col):
     return F.pmod(F.xxhash64(col), F.lit(N_SHINGLE_BUCKETS)).cast("int")
 
 
+# The scope releases every persist the batch takes when the body
+# returns OR raises: a failed write must not leave them cached for the
+# session.
+@cache_scope()
 def _dedup_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -83,18 +89,20 @@ def _dedup_batch(
     max_band: int = 64,
     min_jaccard: float = 0.5,
 ) -> None:
-    docs = batch_df.select("doc_id", "text").dropDuplicates(["doc_id"]).persist()
+    docs = scoped_persist(
+        batch_df.select("doc_id", "text").dropDuplicates(["doc_id"])
+    )
 
     # --- exact dedup via the persisted hash index ------------------
-    h_new = docs.select(
-        F.md5(normalized_text()).alias("dup_hash"), "doc_id"
-    ).persist()
+    h_new = scoped_persist(
+        docs.select(F.md5(normalized_text()).alias("dup_hash"), "doc_id")
+    )
     all_h = (
         spark.read.parquet(p["hashes"]).unionByName(h_new)
         if os.path.isdir(p["hashes"])
         else h_new
     )
-    exact = (
+    exact = scoped_persist(
         all_h.join(
             h_new.select("dup_hash", F.col("doc_id").alias("doc_id_r")),
             "dup_hash",
@@ -107,12 +115,11 @@ def _dedup_batch(
             F.lit(1.0).alias("jaccard"),
         )
         .dropDuplicates(["doc_id_a", "doc_id_b"])
-        .persist()
     )
 
     # --- near-dup candidates via the persisted band index ----------
-    sh_new = doc_shingles(docs, k).persist()
-    keys_new = _band_keys(sh_new, num_hashes, band_size).persist()
+    sh_new = scoped_persist(doc_shingles(docs, k))
+    keys_new = scoped_persist(_band_keys(sh_new, num_hashes, band_size))
     # exact pairs verify trivially at jaccard 1.0 through the band path
     # (identical docs share every band key), so anti-join them away:
     # each exact pair is emitted exactly once with kind='exact', and no
@@ -138,12 +145,11 @@ def _dedup_batch(
     # old docs' shingles come from the bucketed store with partition
     # pruning: only the buckets of the docs the candidates touch are
     # read, never the whole store.
-    need = (
+    need = scoped_persist(
         cand.select(F.col("doc_id_a").alias("doc_id"))
         .unionByName(cand.select(F.col("doc_id_b").alias("doc_id")))
         .dropDuplicates(["doc_id"])
         .join(docs.select("doc_id"), "doc_id", "left_anti")  # old docs only
-        .persist()
     )
     if os.path.isdir(p["shingles"]):
         bkts = [r["b"] for r in need.select(_bucket("doc_id").alias("b")).distinct().collect()]
@@ -179,8 +185,6 @@ def _dedup_batch(
         .partitionBy("bkt")
         .parquet(p["shingles"])
     )
-    for df in (docs, h_new, sh_new, keys_new, need, exact):
-        df.unpersist()
 
 
 def compact_dedup_state(

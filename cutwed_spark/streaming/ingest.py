@@ -26,8 +26,9 @@ and belongs outside the stream.
 
 The foreachBatch body calls the batch pipeline's stage functions
 (``assemble_state``, ``score_new_pairs``; ``finalize`` adds
-``read_scored`` and ``match_threshold``) and keeps only the block-key
-index join, the version marker and the write order. It is idempotent
+``read_scored`` and ``match_threshold``) and the batch blocking's
+``cap_blocks``/``block_pairs``, and keeps only the block-key index
+read, the version marker and the write order. It is idempotent
 per batch id in the usual Spark sense: the stream checkpoint prevents
 reprocessing, and ``score_new_pairs`` skips pairs the scored log holds.
 """
@@ -40,9 +41,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cutwed_spark.cache import cache_scope, scoped_persist
 from cutwed_spark.operators.blocking import (
     SIGNATURE_FAMILY_VERSION,
     block_keys_from_state,
+    block_pairs,
+    cap_blocks,
     length_filter_pairs,
 )
 from cutwed_spark.operators.clustering import assign_clusters
@@ -145,6 +149,10 @@ def incremental_candidates(
     return cand, new_keys
 
 
+# The scope releases every persist the batch takes (the new keys, the
+# index join's block-size table) when the body returns OR raises: a
+# failed write must not leave them cached for the session.
+@cache_scope()
 def _incremental_batch(
     spark: SparkSession, batch_df: DataFrame, cfg: PipelineConfig, p: dict
 ) -> None:
@@ -161,7 +169,7 @@ def _incremental_batch(
     )
 
     cand, new_keys = incremental_candidates(spark, new_state, p, cfg)
-    new_keys = new_keys.persist()
+    new_keys = scoped_persist(new_keys)
     # Scoring still reads the state table — candidate pairs need the
     # OLD side's series payload. That is a payload fetch (column-
     # pruned, join-filtered), not a recompute.
@@ -194,7 +202,6 @@ def _incremental_batch(
             "left_anti",
         )
     state_rows.write.mode("append").parquet(p["state"])
-    new_keys.unpersist()
 
 
 def run_incremental(
@@ -244,12 +251,11 @@ def _index_join_pairs(
     ``new_keys`` -> pairs (``{id_col}_a`` < ``{id_col}_b``) that share a
     key and have at least one side in ``new_ids``.
 
-    Only keys a new row carries are read past the index scan; keys
-    with fewer than 2 or more than ``max_size`` DISTINCT ids are
-    dropped, so a replayed batch (crash between the index append and
-    the stream checkpoint commit) cannot inflate a key past the cap.
-    One side is restricted to new ids: old-x-old pairs are
-    structurally impossible, so per-batch cost ~ new x neighborhood."""
+    Only keys a new row carries are read past the index scan; the rest
+    is the batch blocking's ``cap_blocks`` + ``block_pairs`` with one
+    side restricted to ``new_ids``. The cap counts distinct ids, so a
+    replayed batch (a crash between the index append and the stream
+    checkpoint commit) cannot inflate a key past it."""
     all_keys = (
         spark.read.parquet(index_dir).unionByName(new_keys)
         if os.path.isdir(index_dir)
@@ -257,23 +263,8 @@ def _index_join_pairs(
     )
     hot = new_keys.select(key).dropDuplicates([key])
     touched = all_keys.join(hot, key, "left_semi")
-    sized = touched.groupBy(key).agg(F.count_distinct(id_col).alias("block_size"))
-    pair_keys = sized.where(
-        (F.col("block_size") >= 2) & (F.col("block_size") <= max_size)
-    ).select(key)
-    kept = touched.join(pair_keys, key)
-    kept_new = kept.join(new_ids, id_col, "left_semi")
-    left, right = f"l.{id_col}", f"r.{id_col}"
-    return (
-        kept.alias("l")
-        .join(kept_new.alias("r"), key)
-        .where(F.col(left) != F.col(right))
-        .select(
-            F.least(left, right).alias(f"{id_col}_a"),
-            F.greatest(left, right).alias(f"{id_col}_b"),
-        )
-        .dropDuplicates([f"{id_col}_a", f"{id_col}_b"])
-    )
+    kept, _ = cap_blocks(touched, key, id_col, max_size)
+    return block_pairs(kept, key, id_col, new_ids)
 
 
 def _compact_dir(

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from cutwed_spark.operators.assemble import assemble_with_signatures
 from cutwed_spark.operators.blocking import (
     build_candidate_pairs_from_state,
-    prune_oversized_blocks,
+    cap_blocks,
 )
 
 
@@ -60,17 +60,25 @@ def test_oversized_block_dropped_and_reported(spark, boilerplate_corpus):
 
 
 def test_cap_keeps_small_blocks_intact(spark):
+    """The cap counts DISTINCT ids: block 3 holds exactly max_size ids,
+    one of them on two rows (a replayed index append), so it is kept
+    and reported at size max_size, not dropped as 11 rows."""
     blocks = spark.createDataFrame(
-        [(f"c{i}", 1) for i in range(5)] + [(f"d{i}", 2) for i in range(100)],
+        [(f"c{i}", 1) for i in range(5)]
+        + [(f"d{i}", 2) for i in range(100)]
+        + [(f"e{i}", 3) for i in range(10)]
+        + [("e0", 3)],
         "conv_id string, block_key bigint",
     )
-    kept, stats = prune_oversized_blocks(blocks, max_block=10)
+    kept, stats = cap_blocks(blocks, "block_key", "conv_id", max_size=10)
     st = stats.collect()[0].asDict()
-    assert st["n_blocks"] == 2
+    assert st["n_blocks"] == 3
     assert st["n_dropped_blocks"] == 1
-    assert st["est_candidate_pairs"] == 10  # 5*4/2 from the small block
-    keys = [r["block_key"] for r in kept.select("block_key").distinct().collect()]
-    assert keys == [1]
+    assert st["max_block_size"] == 100
+    # 5*4/2 from the small block + 10*9/2 from the one at the cap
+    assert st["est_candidate_pairs"] == 10 + 45
+    keys = sorted(r["block_key"] for r in kept.select("block_key").distinct().collect())
+    assert keys == [1, 3]
 
 
 def test_length_filter_pairs(spark):

@@ -199,15 +199,18 @@ def test_lsh_topk_recall(emb):
 def test_lsh_bucket_cap_drops_pathological_bucket(spark):
     """All-identical embeddings pile into ONE bucket; the cap must drop
     it (no quadratic self-join) and the stats must surface the drop."""
-    from cutwed_spark.operators.similarity import lsh_bucket_ids, lsh_bucket_stats
+    from cutwed_spark.operators.blocking import cap_blocks
+    from cutwed_spark.operators.similarity import lsh_bucket_ids
 
     rows = [(i, [1.0] * 8) for i in range(50)]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     out = lsh_cosine_topk(df, dim=8, k=3, n_planes=4, max_bucket=10)
     assert out.count() == 0  # the only bucket is oversized -> dropped
-    stats = lsh_bucket_stats(lsh_bucket_ids(df, dim=8, n_planes=4), max_bucket=10)
+    _, stats = cap_blocks(
+        lsh_bucket_ids(df, dim=8, n_planes=4), "bucket", "vec_id", max_size=10
+    )
     s = stats.collect()[0]
-    assert s["n_dropped_buckets"] == 1 and s["max_bucket_size"] == 50
+    assert s["n_dropped_blocks"] == 1 and s["max_block_size"] == 50
     assert s["est_candidate_pairs"] == 0
 
 

@@ -115,8 +115,9 @@ def test_no_forced_broadcast_on_unbounded_sides(spark, small_corpus):
     them (AQE may still choose broadcast at runtime when sizes fit)."""
     from cutwed_spark.operators.assemble import assemble_with_signatures
     from cutwed_spark.operators.blocking import (
+        DEFAULT_MAX_BLOCK,
         block_keys_from_state,
-        prune_oversized_blocks,
+        cap_blocks,
     )
     from cutwed_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -127,8 +128,11 @@ def test_no_forced_broadcast_on_unbounded_sides(spark, small_corpus):
         ngram_jaccard_pairs(docs)._jdf.queryExecution().analyzed().toString()
     )
     assert "ResolvedHint" not in analyzed, "forced broadcast hint in dedup"
-    kept, _ = prune_oversized_blocks(
-        block_keys_from_state(assemble_with_signatures(small_corpus))
+    kept, _ = cap_blocks(
+        block_keys_from_state(assemble_with_signatures(small_corpus)),
+        "block_key",
+        "conv_id",
+        DEFAULT_MAX_BLOCK,
     )
     analyzed = str(kept._jdf.queryExecution().analyzed().toString())
     assert "ResolvedHint" not in analyzed, "forced broadcast hint in blocking"

@@ -139,6 +139,34 @@ def test_incremental_candidates_scan_only_index(spark, split_corpus):
     assert cand.count() >= 0
 
 
+def test_batch_blocking_equals_first_microbatch(spark, split_corpus, tmp_path):
+    """On one state table, the stream's index join against a fresh,
+    empty work dir returns exactly the batch blocking's pair set: with
+    no index every key is new, and both paths are cap_blocks +
+    block_pairs over the same block keys."""
+    from cutwed_spark.cache import cache_scope
+    from cutwed_spark.operators.blocking import build_candidate_pairs_from_state
+    from cutwed_spark.plans.pipeline import assemble_state
+    from cutwed_spark.streaming.ingest import _paths, incremental_candidates
+
+    _, _, tr, _ = split_corpus
+    cfg = PipelineConfig(threshold=THRESHOLD)
+
+    def pair_set(df):
+        return {(r["conv_id_a"], r["conv_id_b"]) for r in df.collect()}
+
+    with cache_scope():
+        state = assemble_state(spark.createDataFrame(tr), cfg)
+        batch, _ = build_candidate_pairs_from_state(
+            state, cfg.band_size, cfg.num_hashes, cfg.max_block
+        )
+        stream, _ = incremental_candidates(
+            spark, state, _paths(str(tmp_path / "work")), cfg
+        )
+        batch_pairs = pair_set(batch)
+        assert batch_pairs and pair_set(stream) == batch_pairs
+
+
 def test_stream_honours_length_ratio_max(spark, split_corpus, tmp_path):
     """length_ratio_max prunes the stream's candidates as it prunes the
     batch pipeline's: one config scores one pair universe."""

@@ -103,6 +103,43 @@ def _run_ingest(spark, work, batches, cfg, replay_first=False):
     return p
 
 
+@pytest.mark.parametrize("module", ["ingest", "dedup"])
+def test_failed_microbatch_releases_its_persists(
+    spark, tmp_path, er_batches, monkeypatch, module
+):
+    """A write that raises inside a microbatch must not leave the frames
+    the batch persisted cached for the session: both batch bodies run in
+    a cache_scope, which releases on a raise as on a return."""
+    from pyspark.storagelevel import StorageLevel
+
+    df_type, writer_type = type(spark.range(1)), type(spark.range(1).write)
+    persisted = []
+    real_persist = df_type.persist
+
+    def recording_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    def failing_write(self, *args, **kwargs):
+        raise OSError("write failed")
+
+    monkeypatch.setattr(df_type, "persist", recording_persist)
+    monkeypatch.setattr(writer_type, "parquet", failing_write)
+    work = str(tmp_path / "w")
+    os.makedirs(work)
+    with pytest.raises(OSError, match="write failed"):
+        if module == "ingest":
+            batch = spark.createDataFrame(er_batches[0])
+            _incremental_batch(spark, batch, PipelineConfig(), ingest_paths(work))
+        else:
+            batch = spark.createDataFrame(
+                [(0, BASE), (1, BASE), (2, NEAR)], "doc_id bigint, text string"
+            )
+            _dedup_batch(spark, batch, dedup_paths(work))
+    assert persisted
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+
 def test_ingest_batch_replay_idempotent(spark, tmp_path, er_batches):
     """Re-running _incremental_batch on an already-committed batch must
     leave the state table row-identical (conv anti-join guard), add no
