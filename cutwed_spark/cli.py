@@ -99,8 +99,6 @@ def cmd_run(args) -> int:
 def cmd_stream_dedup(args) -> int:
     """Incremental document dedup over a directory of parquet drops:
     exact + verified near-dup edges against the persisted indexes."""
-    import json
-
     from cutwed_spark.streaming.dedup import _paths, run_incremental_dedup
 
     spark = _spark(args)
@@ -129,38 +127,23 @@ def cmd_stream_dedup(args) -> int:
 
 
 def cmd_compact(args) -> int:
-    """Compact a streaming work dir (run with the stream STOPPED): the
-    per-microbatch appends accumulate small files; this rewrites each
-    state table to a bounded file count, deduping replay artifacts on
-    the way. Auto-detects the layout (ER ingest vs document dedup) from
-    the tables present unless ``--mode`` forces one."""
-    import json
+    """Compact a streaming work dir, ER ingest or doc dedup (run with the
+    stream STOPPED): the per-microbatch appends accumulate small files;
+    this rewrites every state table present to a bounded file count,
+    deduping replay artifacts on the way."""
+    from cutwed_spark.streaming.ingest import _TABLES, _paths, compact_stream_state
 
-    from cutwed_spark.streaming.dedup import _paths as dedup_paths
-    from cutwed_spark.streaming.dedup import compact_dedup_state
-    from cutwed_spark.streaming.ingest import _paths as er_paths
-    from cutwed_spark.streaming.ingest import compact_stream_state
-
-    mode = args.mode
-    if mode == "auto":
-        is_er = os.path.isdir(er_paths(args.work)["keys"])
-        is_dedup = os.path.isdir(dedup_paths(args.work)["bands"])
-        if is_er == is_dedup:
-            print(
-                json.dumps(
-                    {
-                        "error": "cannot auto-detect work-dir layout; "
-                        "pass --mode er or --mode dedup",
-                        "work": args.work,
-                    }
-                )
+    p = _paths(args.work)
+    if not any(os.path.isdir(p[name]) for name in _TABLES):
+        print(
+            json.dumps(
+                {"error": "no streaming state table in the work dir", "work": args.work}
             )
-            return 2
-        mode = "er" if is_er else "dedup"
+        )
+        return 2
     spark = _spark(args)
-    fn = compact_stream_state if mode == "er" else compact_dedup_state
-    stats = fn(spark, args.work, target_files=args.target_files)
-    print(json.dumps({"mode": mode, "work": args.work, "tables": stats}))
+    stats = compact_stream_state(spark, args.work, target_files=args.target_files)
+    print(json.dumps({"work": args.work, "tables": stats}))
     return 0
 
 
@@ -223,6 +206,11 @@ def cmd_stream(args) -> int:
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(prog="cutwed_spark", description=__doc__)
     sub = p.add_subparsers(dest="cmd", required=True)
+    spark_flags = argparse.ArgumentParser(add_help=False)
+    spark_flags.add_argument("--master", default=None)
+    spark_flags.add_argument(
+        "--shuffle-partitions", dest="shuffle_partitions", type=int, default=None
+    )
 
     ps = sub.add_parser("synth", help="write a deterministic synthetic corpus")
     ps.add_argument("--out", required=True)
@@ -231,7 +219,7 @@ def main(argv=None) -> int:
     ps.add_argument("--max-turns", dest="max_turns", type=int, default=64)
     ps.set_defaults(fn=cmd_synth)
 
-    pr = sub.add_parser("run", help="run the ER pipeline")
+    pr = sub.add_parser("run", help="run the ER pipeline", parents=[spark_flags])
     pr.add_argument("--input", required=True, help="transcripts parquet path")
     pr.add_argument("--labeled", default=None, help="labeled_pairs parquet path")
     pr.add_argument("--output", required=True)
@@ -241,13 +229,12 @@ def main(argv=None) -> int:
     pr.add_argument("--lamb", type=float, default=0.5)
     pr.add_argument("--max-turns", dest="max_turns", type=int, default=128)
     pr.add_argument("--max-block", dest="max_block", type=int, default=64)
-    pr.add_argument("--master", default=None)
-    pr.add_argument("--shuffle-partitions", dest="shuffle_partitions", type=int,
-                    default=None)
     pr.add_argument("--write-scored", dest="write_scored", action="store_true")
     pr.set_defaults(fn=cmd_run)
 
-    pc = sub.add_parser("curate", help="curation funnel over documents")
+    pc = sub.add_parser(
+        "curate", help="curation funnel over documents", parents=[spark_flags]
+    )
     pc.add_argument("--input", required=True, help="documents parquet path")
     pc.add_argument("--output", required=True)
     pc.add_argument("--min-quality", dest="min_quality", type=float, default=0.5)
@@ -255,54 +242,41 @@ def main(argv=None) -> int:
                     help="'en' or '' to disable the language gate")
     pc.add_argument("--min-jaccard", dest="min_jaccard", type=float, default=0.5,
                     help="near-dup prune threshold (verified exact Jaccard)")
-    pc.add_argument("--master", default=None)
-    pc.add_argument("--shuffle-partitions", dest="shuffle_partitions", type=int,
-                    default=None)
     pc.set_defaults(fn=cmd_curate)
 
-    pt = sub.add_parser("stream", help="incremental ER over parquet drops")
+    pt = sub.add_parser(
+        "stream", help="incremental ER over parquet drops", parents=[spark_flags]
+    )
     pt.add_argument("--input", required=True, help="directory of parquet drops")
     pt.add_argument("--work", required=True, help="state/checkpoint work dir")
     pt.add_argument("--output", default=None, help="default <work>/out")
     pt.add_argument("--threshold", type=float, default=None,
                     help="match cut; default: finalize's label-free rule")
     pt.add_argument("--max-files", dest="max_files", type=int, default=None)
-    pt.add_argument("--master", default=None)
-    pt.add_argument("--shuffle-partitions", dest="shuffle_partitions", type=int,
-                    default=None)
     pt.set_defaults(fn=cmd_stream)
 
     pd = sub.add_parser(
-        "stream-dedup", help="incremental document dedup over parquet drops"
+        "stream-dedup",
+        help="incremental document dedup over parquet drops",
+        parents=[spark_flags],
     )
     pd.add_argument("--input", required=True, help="directory of parquet drops")
     pd.add_argument("--work", required=True, help="state/checkpoint work dir")
     pd.add_argument("--min-jaccard", dest="min_jaccard", type=float, default=0.5)
-    pd.add_argument("--master", default=None)
-    pd.add_argument("--shuffle-partitions", dest="shuffle_partitions", type=int,
-                    default=None)
     pd.set_defaults(fn=cmd_stream_dedup)
 
     pk = sub.add_parser(
         "compact",
         help="compact a streaming work dir's state tables (stream stopped)",
+        parents=[spark_flags],
     )
     pk.add_argument("--work", required=True, help="state/checkpoint work dir")
-    pk.add_argument(
-        "--mode",
-        choices=["auto", "er", "dedup"],
-        default="auto",
-        help="work-dir layout; auto detects from the tables present",
-    )
     pk.add_argument(
         "--target-files", dest="target_files", type=int, default=None,
         help="files per UNPARTITIONED table after compaction (default: "
         "shuffle partitions); hive-partitioned tables (the dedup "
         "shingle store) compact to one file per partition instead",
     )
-    pk.add_argument("--master", default=None)
-    pk.add_argument("--shuffle-partitions", dest="shuffle_partitions", type=int,
-                    default=None)
     pk.set_defaults(fn=cmd_compact)
 
     args = p.parse_args(argv)

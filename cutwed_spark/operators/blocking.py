@@ -13,7 +13,7 @@ Everything here is Catalyst built-ins (xxhash64, higher-order functions,
 joins, aggregates): map-side partial aggregation computes the k minhash
 mins per conversation, and oversized LSH buckets (non-discriminative
 "stopword" blocks — the skew hazard, SURVEY.md §7 hard part 4) are
-dropped with the drop surfaced as a metric, never silently.
+dropped by ``cap_blocks``, and batch ER reports the drop as a metric.
 
 The signature and block-key builders return SQL expression text that
 the callers apply with ``selectExpr``: building the same expressions
@@ -162,17 +162,18 @@ def cap_blocks(
     s generates s*(s-1)/2 pairs, blocks above the cap are almost always
     non-discriminative boilerplate (the skew bombs at scale), and
     singletons — most keys on the bench corpus — produce no pair but
-    would ride through the self-join. The drop is REPORTED, never
-    silent: stats is one row (n_blocks, n_dropped_blocks,
-    max_block_size, est_candidate_pairs).
+    would ride through the self-join. ``stats`` is one row (n_blocks,
+    n_dropped_blocks, max_block_size, est_candidate_pairs); only batch
+    ER reads it (``run_pipeline``'s ``metrics["blocking"]``). The stream
+    index join (ER and doc dedup) and the embedding LSH joins discard
+    it, so their drops are counted nowhere.
 
-    The size table (one row per key) feeds the stats and the kept-keys
-    join, so it is persisted; scoped, an enclosing cache_scope releases
-    it. No broadcast hint: the kept-key set is unbounded at corpus
+    The size table (one row per key) is not persisted: where ``stats``
+    is discarded the kept-keys join is its one consumer, and batch ER
+    aggregates a block table it has already persisted and partitioned
+    by key. No broadcast hint: the kept-key set is unbounded at corpus
     scale, and AQE picks the join strategy from runtime sizes."""
-    sized = scoped_persist(
-        keys.groupBy(key).agg(F.count_distinct(id_col).alias("block_size"))
-    )
+    sized = keys.groupBy(key).agg(F.count_distinct(id_col).alias("block_size"))
     size = F.col("block_size")
     stats = sized.agg(
         F.count(F.lit(1)).alias("n_blocks"),

@@ -9,8 +9,9 @@ hasn't changed):
 
   new doc files -> shingle + digest-split MinHash band keys for the
                    NEW docs only
-                -> exact dup edges: md5(normalized text) joined against
-                   the persisted (dup_hash, doc_id) index
+                -> exact dup edges: md5(normalized text) self-joined
+                   with the persisted (dup_hash, doc_id) index by
+                   ``block_pairs``, uncapped
                 -> near-dup candidates: new band keys joined against
                    the persisted (band_key, doc_id) index, band sizes
                    capped
@@ -31,6 +32,9 @@ and the band-index join is ER ingest's ``_index_join_pairs``
 (streaming/ingest.py), whose pair self-join is the batch operators'
 ``block_pairs`` (operators/blocking.py) with the one hot-band cap,
 ``cap_blocks``; ``tests/test_streaming_dedup.py`` pins the parity.
+The work-dir layer is ER ingest's too: its table registry
+(``_paths``), drain (``_drain``), stored-plus-new read
+(``_with_stored``) and compaction (``compact_stream_state``).
 
 Per-batch cost ~ O(batch + touched neighborhood + touched buckets),
 never O(corpus). The stream checkpoint provides exactly-once batch
@@ -46,29 +50,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cutwed_spark.cache import cache_scope, scoped_persist
+from cutwed_spark.operators.blocking import block_pairs
 from cutwed_spark.operators.dedup import (
     _band_keys,
     _verified_pairs,
     doc_shingles,
     normalized_text,
 )
-from cutwed_spark.streaming.ingest import _compact_dir, _index_join_pairs
+from cutwed_spark.streaming.ingest import (
+    _drain,
+    _index_join_pairs,
+    _paths,
+    _with_stored,
+)
 
 DOC_SCHEMA = "doc_id bigint, text string"
 
 # number of doc_id-hash partitions of the shingle store; the
 # verification fetch reads only the buckets of the docs it needs
 N_SHINGLE_BUCKETS = 64
-
-
-def _paths(work_dir: str) -> dict:
-    return {
-        "hashes": os.path.join(work_dir, "dup_hashes"),
-        "bands": os.path.join(work_dir, "band_keys"),
-        "shingles": os.path.join(work_dir, "shingles"),
-        "edges": os.path.join(work_dir, "dup_edges"),
-        "stream_ckpt": os.path.join(work_dir, "stream_ckpt"),
-    }
 
 
 def _bucket(col):
@@ -97,24 +97,16 @@ def _dedup_batch(
     h_new = scoped_persist(
         docs.select(F.md5(normalized_text()).alias("dup_hash"), "doc_id")
     )
-    all_h = (
-        spark.read.parquet(p["hashes"]).unionByName(h_new)
-        if os.path.isdir(p["hashes"])
-        else h_new
-    )
+    all_h = _with_stored(spark, p["hashes"], h_new)
+    # no size cap: an exact-duplicate group emits all its pairs however
+    # large it is (the band cap bounds near-dup candidates only)
     exact = scoped_persist(
-        all_h.join(
-            h_new.select("dup_hash", F.col("doc_id").alias("doc_id_r")),
-            "dup_hash",
-        )
-        .where(F.col("doc_id") != F.col("doc_id_r"))
-        .select(
-            F.least("doc_id", "doc_id_r").alias("doc_id_a"),
-            F.greatest("doc_id", "doc_id_r").alias("doc_id_b"),
+        block_pairs(all_h, "dup_hash", "doc_id", docs.select("doc_id")).select(
+            "doc_id_a",
+            "doc_id_b",
             F.lit("exact").alias("kind"),
             F.lit(1.0).alias("jaccard"),
         )
-        .dropDuplicates(["doc_id_a", "doc_id_b"])
     )
 
     # --- near-dup candidates via the persisted band index ----------
@@ -187,46 +179,6 @@ def _dedup_batch(
     )
 
 
-def compact_dedup_state(
-    spark: SparkSession, work_dir: str, target_files: int | None = None
-) -> dict:
-    """Maintenance pass for a long-lived dedup work dir (the
-    ``compact_stream_state`` analog, streaming/ingest.py): every
-    microbatch appends one file-set each to the hash index, band index,
-    shingle store, and edge table, so after thousands of drops the
-    per-batch narrow scans pay footer/listing overhead per tiny file.
-    Rewrites each table to ``target_files`` files, deduping replay
-    artifacts on the way (hashes on (dup_hash, doc_id), bands on
-    (band_key, doc_id), shingles on (doc_id, shingle), edges on
-    (doc_id_a, doc_id_b, kind)) — the same row sets every reader
-    already dedups to, so answers are unchanged. The shingle store
-    keeps its doc_id-bucket partitioning (the verification fetch's
-    partition pruning depends on it).
-
-    Run while the stream is STOPPED — the directory swap is two
-    renames. Returns {table: {"files_before": n, "files_after": m}}.
-    """
-    p = _paths(work_dir)
-    n = target_files or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    plan = {
-        "hashes": (p["hashes"], ["dup_hash", "doc_id"], None),
-        "bands": (p["bands"], ["band_key", "doc_id"], None),
-        "shingles": (p["shingles"], ["doc_id", "shingle"], "bkt"),
-        "edges": (p["edges"], ["doc_id_a", "doc_id_b", "kind"], None),
-    }
-    out = {}
-    for name, (path, cols, part_col) in plan.items():
-        if not os.path.isdir(path):
-            continue
-        before, after = _compact_dir(
-            spark, path, cols, n, partition_col=part_col
-        )
-        out[name] = {"files_before": before, "files_after": after}
-    return out
-
-
 def run_incremental_dedup(
     spark: SparkSession,
     input_dir: str,
@@ -246,11 +198,12 @@ def run_incremental_dedup(
     tables (``dup_hashes``, ``band_keys``, bucketed ``shingles``).
     """
     p = _paths(work_dir)
-    os.makedirs(work_dir, exist_ok=True)
-    stream = spark.readStream.schema(DOC_SCHEMA).parquet(input_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _dedup_batch(
+    return _drain(
+        spark,
+        input_dir,
+        DOC_SCHEMA,
+        work_dir,
+        lambda batch_df: _dedup_batch(
             spark,
             batch_df,
             p,
@@ -259,14 +212,6 @@ def run_incremental_dedup(
             band_size=band_size,
             max_band=max_band,
             min_jaccard=min_jaccard,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", p["stream_ckpt"])
-        .trigger(availableNow=True)
-        .start()
+        ),
+        await_termination=await_termination,
     )
-    if await_termination:
-        q.awaitTermination()
-    return q

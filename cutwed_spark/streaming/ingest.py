@@ -31,6 +31,11 @@ The foreachBatch body calls the batch pipeline's stage functions
 read, the version marker and the write order. It is idempotent
 per batch id in the usual Spark sense: the stream checkpoint prevents
 reprocessing, and ``score_new_pairs`` skips pairs the scored log holds.
+
+The work-dir layer here serves doc dedup (streaming/dedup.py) too: one
+table registry (``_TABLES``/``_paths``), one drain (``_drain``), one
+stored-plus-new read (``_with_stored``) and one compaction
+(``compact_stream_state``).
 """
 
 from __future__ import annotations
@@ -68,13 +73,67 @@ TRANSCRIPT_SCHEMA = (
 STATE_FORMAT_VERSION = 2
 
 
+# The one table registry of both streaming work-dir layouts (ER ingest:
+# state, keys, scored; doc dedup, streaming/dedup.py: hashes, bands,
+# shingles, edges): table -> (subdir, columns a replayed append
+# duplicates rows on, hive partition column).
+_TABLES = {
+    "state": ("state", ["conv_id"], None),
+    "keys": ("block_keys", ["conv_id", "block_key"], None),
+    "scored": ("scored", ["conv_id_a", "conv_id_b"], None),
+    "hashes": ("dup_hashes", ["dup_hash", "doc_id"], None),
+    "bands": ("band_keys", ["band_key", "doc_id"], None),
+    "shingles": ("shingles", ["doc_id", "shingle"], "bkt"),
+    "edges": ("dup_edges", ["doc_id_a", "doc_id_b", "kind"], None),
+}
+
+
 def _paths(work_dir: str) -> dict:
-    return {
-        "state": os.path.join(work_dir, "state"),
-        "keys": os.path.join(work_dir, "block_keys"),
-        "scored": os.path.join(work_dir, "scored"),
-        "stream_ckpt": os.path.join(work_dir, "stream_ckpt"),
-    }
+    p = {name: os.path.join(work_dir, sub) for name, (sub, _, _) in _TABLES.items()}
+    p["stream_ckpt"] = os.path.join(work_dir, "stream_ckpt")
+    return p
+
+
+def _has_parquet(path: str) -> bool:
+    """Whether ``path`` is a dir holding (unpartitioned) parquet files."""
+    return os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path))
+
+
+def _with_stored(spark: SparkSession, path: str, new: DataFrame) -> DataFrame:
+    """The stored table at ``path`` plus a batch's ``new`` rows (just
+    ``new`` before the first append)."""
+    if _has_parquet(path):
+        return spark.read.parquet(path).unionByName(new)
+    return new
+
+
+def _drain(
+    spark: SparkSession,
+    input_dir: str,
+    schema: str,
+    work_dir: str,
+    body,
+    max_files_per_trigger: int | None = None,
+    await_termination: bool = True,
+):
+    """The one stream drain: parquet files of ``schema`` from
+    ``input_dir``, each microbatch handed to ``body(batch_df)``,
+    checkpointed under ``work_dir``; processes the available data and
+    stops (availableNow trigger). Returns the query."""
+    os.makedirs(work_dir, exist_ok=True)
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    q = (
+        reader.parquet(input_dir)
+        .writeStream.foreachBatch(lambda batch_df, _batch_id: body(batch_df))
+        .option("checkpointLocation", _paths(work_dir)["stream_ckpt"])
+        .trigger(availableNow=True)
+        .start()
+    )
+    if await_termination:
+        q.awaitTermination()
+    return q
 
 
 def _state_version_marker(state_dir: str) -> str:
@@ -99,7 +158,6 @@ def check_state_version(state_dir: str) -> None:
         "state_format": STATE_FORMAT_VERSION,
     }
     marker = _state_version_marker(state_dir)
-    has_parquet = any(f.endswith(".parquet") for f in os.listdir(state_dir))
     if os.path.isfile(marker):
         with open(marker) as fh:
             found = json.load(fh)
@@ -111,7 +169,7 @@ def check_state_version(state_dir: str) -> None:
                 f"Rebuild the state dir by re-ingesting from the source "
                 f"transcripts."
             )
-    elif has_parquet:
+    elif _has_parquet(state_dir):
         raise ValueError(
             f"incremental state at {state_dir} predates state versioning "
             f"(no _state_version.json); rebuild it by re-ingesting."
@@ -149,9 +207,9 @@ def incremental_candidates(
     return cand, new_keys
 
 
-# The scope releases every persist the batch takes (the new keys, the
-# index join's block-size table) when the body returns OR raises: a
-# failed write must not leave them cached for the session.
+# The scope releases every persist the batch takes (the new keys) when
+# the body returns OR raises: a failed write must not leave them cached
+# for the session.
 @cache_scope()
 def _incremental_batch(
     spark: SparkSession, batch_df: DataFrame, cfg: PipelineConfig, p: dict
@@ -164,20 +222,14 @@ def _incremental_batch(
     # compatible state that the guard then rejects as pre-versioning.
     os.makedirs(p["state"], exist_ok=True)
     check_state_version(p["state"])
-    have_state = any(
-        f.endswith(".parquet") for f in os.listdir(p["state"])
-    )
+    have_state = _has_parquet(p["state"])
 
     cand, new_keys = incremental_candidates(spark, new_state, p, cfg)
     new_keys = scoped_persist(new_keys)
     # Scoring still reads the state table — candidate pairs need the
     # OLD side's series payload. That is a payload fetch (column-
     # pruned, join-filtered), not a recompute.
-    full = (
-        spark.read.parquet(p["state"]).unionByName(new_state)
-        if have_state
-        else new_state
-    )
+    full = _with_stored(spark, p["state"], new_state)
     if cfg.length_ratio_max is not None:
         # the same comparison cleaning run_pipeline's blocking applies
         cand = length_filter_pairs(cand, full, cfg.length_ratio_max)
@@ -217,24 +269,15 @@ def run_incremental(
     """
     cfg = cfg or PipelineConfig()
     p = _paths(work_dir)
-    os.makedirs(work_dir, exist_ok=True)
-    reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _incremental_batch(spark, batch_df, cfg, p)
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", p["stream_ckpt"])
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark,
+        input_dir,
+        TRANSCRIPT_SCHEMA,
+        work_dir,
+        lambda batch_df: _incremental_batch(spark, batch_df, cfg, p),
+        max_files_per_trigger,
+        await_termination,
     )
-    if await_termination:
-        q.awaitTermination()
-    return q
 
 
 def _index_join_pairs(
@@ -256,11 +299,7 @@ def _index_join_pairs(
     side restricted to ``new_ids``. The cap counts distinct ids, so a
     replayed batch (a crash between the index append and the stream
     checkpoint commit) cannot inflate a key past it."""
-    all_keys = (
-        spark.read.parquet(index_dir).unionByName(new_keys)
-        if os.path.isdir(index_dir)
-        else new_keys
-    )
+    all_keys = _with_stored(spark, index_dir, new_keys)
     hot = new_keys.select(key).dropDuplicates([key])
     touched = all_keys.join(hot, key, "left_semi")
     kept, _ = cap_blocks(touched, key, id_col, max_size)
@@ -323,14 +362,17 @@ def _compact_dir(
 def compact_stream_state(
     spark: SparkSession, work_dir: str, target_files: int | None = None
 ) -> dict:
-    """Maintenance pass for a long-lived incremental work dir: every
-    microbatch appends one file-set each to the block-key index, the
-    scored table, and the state table, so after thousands of batches
-    the per-batch narrow scans pay footer/listing overhead per tiny
-    file (the classic streaming small-files problem). Rewrites each
-    table to ``target_files`` files (default: the session's shuffle
-    partitions), deduping replay artifacts on the way (keys on
-    (conv_id, block_key), scored on the pair, state on conv_id).
+    """Maintenance pass for a long-lived streaming work dir, ER ingest or
+    doc dedup alike: every microbatch appends one file-set to each
+    table, so after thousands of batches the per-batch narrow scans pay
+    footer/listing overhead per tiny file (the classic streaming
+    small-files problem). Rewrites every registered table present in
+    ``work_dir`` to ``target_files`` files (default: the session's
+    shuffle partitions), deduping replay artifacts on the table's
+    ``_TABLES`` columns — the row sets every reader already dedups to,
+    so answers are unchanged. The dedup shingle store keeps its
+    doc_id-bucket partitioning (the verification fetch's partition
+    pruning depends on it).
 
     Run while the stream is STOPPED — the directory swap is two
     renames, and a concurrent append between them would be lost.
@@ -338,17 +380,11 @@ def compact_stream_state(
     """
     p = _paths(work_dir)
     n = target_files or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    plan = {
-        "keys": (p["keys"], ["conv_id", "block_key"]),
-        "scored": (p["scored"], ["conv_id_a", "conv_id_b"]),
-        "state": (p["state"], ["conv_id"]),
-    }
     out = {}
-    for name, (path, cols) in plan.items():
-        if not os.path.isdir(path):
-            continue
-        before, after = _compact_dir(spark, path, cols, n)
-        out[name] = {"files_before": before, "files_after": after}
+    for name, (_, cols, partition_col) in _TABLES.items():
+        if os.path.isdir(p[name]):
+            before, after = _compact_dir(spark, p[name], cols, n, partition_col)
+            out[name] = {"files_before": before, "files_after": after}
     return out
 
 

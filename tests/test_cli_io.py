@@ -152,14 +152,14 @@ def test_cli_stream_dedup(spark, tmp_path, capsys):
     assert kinds == {(0, 1): "exact", (0, 3): "near", (1, 3): "near"}
 
     # --- compact subcommand over the same (stopped) work dir ---
-    # auto-detect must pick the dedup layout, shrink the edge table to
-    # one file, and leave the reader-visible edge set unchanged
+    # every dedup table is compacted, the edge table shrinks to one
+    # file, and the reader-visible edge set is unchanged
     from cutwed_spark.cli import main as cli_main
 
     assert cli_main(["compact", "--work", work, "--target-files", "1",
                      "--master", "local[4]"]) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["mode"] == "dedup"
+    assert set(out["tables"]) == {"hashes", "bands", "shingles", "edges"}
     assert out["tables"]["edges"]["files_after"] == 1
     after = spark.read.parquet(summary["edges"])
     kinds2 = {(r.doc_id_a, r.doc_id_b): r.kind for r in after.collect()}
@@ -169,14 +169,15 @@ def test_cli_stream_dedup(spark, tmp_path, capsys):
 
 
 def test_cli_compact_auto_detect_fails_cleanly(tmp_path, capsys):
-    """Ambiguous/empty work dirs are refused with an actionable error."""
+    """A work dir with no streaming state table is refused with an
+    actionable error."""
     from cutwed_spark.cli import main
 
     work = str(tmp_path / "empty")
     os.makedirs(work)
     assert main(["compact", "--work", work, "--master", "local[2]"]) == 2
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert "auto-detect" in out["error"]
+    assert "no streaming state table" in out["error"]
 
 
 @pytest.mark.slow

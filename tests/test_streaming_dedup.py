@@ -90,12 +90,12 @@ def test_compact_dedup_state(dedup_out, spark, tmp_path):
     doc_id-bucket partitioning (the verification fetch prunes on it)."""
     import shutil
 
-    from cutwed_spark.streaming.dedup import compact_dedup_state
+    from cutwed_spark.streaming.ingest import compact_stream_state
 
     p, edges_before = dedup_out
     work2 = str(tmp_path / "work2")
     shutil.copytree(os.path.dirname(p["edges"]), work2)
-    stats = compact_dedup_state(spark, work2, target_files=2)
+    stats = compact_stream_state(spark, work2, target_files=2)
     assert set(stats) == {"hashes", "bands", "shingles", "edges"}
     for name in ("hashes", "bands", "edges"):
         assert stats[name]["files_after"] <= 2, (name, stats[name])
@@ -132,6 +132,23 @@ def test_compact_dedup_state(dedup_out, spark, tmp_path):
         if 99 in (k[0], k[1])
     }
     assert post and all(0.5 <= j < 1.0 for j in post.values())
+
+
+def test_exact_group_above_band_cap_is_not_capped(spark, tmp_path):
+    """A normalized-text duplicate group larger than ``max_band`` still
+    yields every pair as 'exact': the band cap bounds near-dup
+    candidates, never the exact-hash join."""
+    from itertools import combinations
+
+    drops, work = str(tmp_path / "drops"), str(tmp_path / "work")
+    # case and whitespace differ; the normalized text is one
+    texts = [BASE, BASE.upper(), "  " + BASE, BASE + " ", BASE, BASE.title()]
+    _write_drop(spark, drops, list(enumerate(texts)) + [(6, OTHER)])
+    run_incremental_dedup(spark, drops, work, max_band=4)
+    edges = spark.read.parquet(_paths(work)["edges"]).collect()
+    pairs = {(r["doc_id_a"], r["doc_id_b"]): r["kind"] for r in edges}
+    assert pairs == {pair: "exact" for pair in combinations(range(6), 2)}
+    assert len(edges) == 15
 
 
 def test_state_tables_shapes(dedup_out, spark):
