@@ -5,11 +5,9 @@ Media are opaque ``binary`` columns with typed metadata — the pattern a
 frame-sample run as Arrow-batched ``mapInPandas`` UDFs so bytes never
 round-trip through Python row objects.
 
-The actual codecs (PIL/libav/etc.) are NOT installed in this
-environment, so the decode step is STUBBED: ``decode_media`` computes a
-deterministic fake decode (dimensions/duration derived from the payload
-bytes) unless a real codec import succeeds, in which case
-``NotImplementedError`` marks the unwritten real path explicitly. The
+No codec (PIL/libav/etc.) is used, so the decode step is STUBBED:
+``decode_media`` computes a deterministic fake decode (dimensions/duration
+derived from the payload bytes), and there is no real-codec path. The
 Spark-side plumbing — schema, partitioning, UDF signature, Arrow batch
 shape — is real and tested.
 """
@@ -64,21 +62,10 @@ def _fake_decode(payload: bytes, kind: str) -> tuple[int, int, int]:
     return 160 + h % 1920, 90 + (h >> 7) % 1080, 1000 + (h >> 13) % 120_000
 
 
-def decode_media(media: DataFrame, use_real_codec: bool = False) -> DataFrame:
+def decode_media(media: DataFrame) -> DataFrame:
     """binary payloads -> typed metadata. Arrow-batched; one pandas
     frame per batch, vectorized except the per-blob codec call (which a
     real codec also requires)."""
-
-    if use_real_codec:
-        # Raised at CONSTRUCTION (driver side), unconditionally: the
-        # real-codec branch is unwritten, so even with PIL importable it
-        # must never fall through to the stub — and a worker-side raise
-        # would be skipped entirely on empty partitions.
-        raise NotImplementedError(
-            "real media decode is not implemented (and PIL/libav are absent "
-            "in this environment); use the deterministic stub "
-            "(use_real_codec=False)"
-        )
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -131,26 +118,17 @@ def resize_images(
     media: DataFrame,
     width: int = 64,
     height: int = 64,
-    use_real_codec: bool = False,
 ) -> DataFrame:
     """Image resize plumbing: 'image' payloads -> fixed (width, height)
     RGB rasters as new binary payloads (n_bytes = width*height*3).
 
     The raster synthesis is the STUB (a deterministic byte stream seeded
     by the source payload digest — replace with PIL's decode+resize+
-    encode when the codec exists; the gate mirrors decode_media); the
+    encode when the codec exists, as in decode_media); the
     Spark side — binary-in/binary-out mapInPandas, Arrow batching,
     pushdown-friendly kind filter, typed output schema — is the real
     operator shape a 100 TB preprocessing pipeline runs.
     """
-
-    if use_real_codec:
-        # Construction-time gate, unconditional — see decode_media.
-        raise NotImplementedError(
-            "real image resize is not implemented (and PIL is absent in "
-            "this environment); use the deterministic stub "
-            "(use_real_codec=False)"
-        )
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         n_out = width * height * 3

@@ -10,15 +10,21 @@
   cosine re-rank inside buckets.
 * ``embedding_near_dup_pairs`` — cosine >= threshold near-duplicate
   edges (the embedding-space dedup operator).
+* ``ivf_cosine_topk`` — the second ANN family: coarse cells from
+  deterministic centroids, exact re-rank among the probed cells.
 
-All dot products run JVM-side via higher-order functions
-(zip_with + aggregate) — no Python in the hot path.
+The LSH top-k and LSH near-dup paths are two callers of one same-bucket
+pair function (``_lsh_pairs``); every join side, cosine and top-k rank
+is built by one helper each. All dot products run JVM-side via
+higher-order functions (zip_with + aggregate) — no Python in the hot
+path.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from cutwed_spark.cache import scoped_persist
 from cutwed_spark.operators.blocking import cap_blocks
@@ -42,31 +48,50 @@ def with_double_embedding(df: DataFrame, col: str = "embedding") -> DataFrame:
     return df.withColumn(col, F.col(col).cast("array<double>"))
 
 
+def _normed(emb: DataFrame, id_col: str) -> DataFrame:
+    """(id_col, embedding as array<double>, nrm = its L2 norm)."""
+    return with_double_embedding(emb).select(
+        F.col(id_col), "embedding", _norm(F.col("embedding")).alias("nrm")
+    )
+
+
+def _side(e: DataFrame, id_col: str, name: str, tag: str, *keep: str) -> DataFrame:
+    """One join side of a ``_normed`` frame: ``keep`` columns, the id as
+    ``name``, the embedding as ``e{tag}`` and its norm as ``n{tag}``."""
+    return e.select(
+        *keep,
+        F.col(id_col).alias(name),
+        F.col("embedding").alias(f"e{tag}"),
+        F.col("nrm").alias(f"n{tag}"),
+    )
+
+
+def _cos() -> Column:
+    """Cosine of the ``a`` and ``b`` sides, rounded to 4 places."""
+    return F.round(
+        _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 4
+    ).alias("cos")
+
+
+def _topk(cand: DataFrame, k: int) -> DataFrame:
+    """(vec_id, neighbor_id, cos) -> the k best neighbors per vec_id,
+    ranked by (cos desc, neighbor_id): deterministic ties."""
+    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("vec_id", "neighbor_id", "cos", "rank")
+    )
+
+
 def cosine_pairs(emb: DataFrame, id_col: str = "vec_id") -> DataFrame:
     """All-pairs cosine (TRIL-deduped). Output: (vec_id_a, vec_id_b, cos)."""
-    e = with_double_embedding(emb).select(
-        F.col(id_col), F.col("embedding"), _norm(F.col("embedding")).alias("nrm")
-    )
-    a = e.select(
-        F.col(id_col).alias("vec_id_a"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = e.select(
-        F.col(id_col).alias("vec_id_b"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
+    e = _normed(emb, id_col)
     return (
-        a.crossJoin(b)
+        _side(e, id_col, "vec_id_a", "a")
+        .crossJoin(_side(e, id_col, "vec_id_b", "b"))
         .where(F.col("vec_id_a") < F.col("vec_id_b"))
-        .select(
-            "vec_id_a",
-            "vec_id_b",
-            F.round(
-                _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 4
-            ).alias("cos"),
-        )
+        .select("vec_id_a", "vec_id_b", _cos())
     )
 
 
@@ -198,31 +223,22 @@ def _table_bucket(dim: int, n_planes: int, table: int) -> Column:
 
 
 def lsh_bucket_ids(
-    emb: DataFrame, dim: int, n_planes: int = 8, id_col: str = "vec_id"
-) -> DataFrame:
-    """Sign-of-projection LSH bucket per vector (single table).
-    Output: (vec_id, bucket int)."""
-    return with_double_embedding(emb).select(
-        F.col(id_col), _table_bucket(dim, n_planes, 0).alias("bucket")
-    )
-
-
-def lsh_bucket_ids_multi(
     emb: DataFrame,
     dim: int,
     n_planes: int = 8,
-    n_tables: int = 4,
     id_col: str = "vec_id",
+    n_tables: int = 1,
 ) -> DataFrame:
-    """Multi-table LSH: one row per (vector, table), each table using an
-    independent slice of the deterministic plane family. A pair whose
-    single-table collision probability is p collides in >= 1 of L
-    tables with probability 1-(1-p)^L — the standard recall lever
-    (measured on the bench corpus: recall@5 0.15 -> ~0.45 at L=4) at
-    L x the bucket-join cost. Output: (vec_id, bucket int), buckets
-    table-disjoint by construction."""
-    e = with_double_embedding(emb)
-    return e.select(
+    """Sign-of-projection LSH buckets: one row per (vector, table), each
+    table using an independent slice of the deterministic plane family
+    (table 0 has bucket offset 0, so one table is the plain
+    single-table bucketing). A pair whose single-table collision
+    probability is p collides in >= 1 of L tables with probability
+    1-(1-p)^L — the standard recall lever (measured on the bench
+    corpus: recall@5 0.15 -> ~0.45 at L=4) at L x the bucket-join
+    cost. Output: (vec_id, bucket int), buckets table-disjoint by
+    construction."""
+    return with_double_embedding(emb).select(
         F.col(id_col),
         F.explode(
             F.array(*[_table_bucket(dim, n_planes, t) for t in range(n_tables)])
@@ -239,6 +255,43 @@ def suggest_n_planes(n_rows: int, target_bucket: int = 256) -> int:
 
     p = math.ceil(math.log2(max(n_rows, 1) / max(target_bucket, 1)))
     return int(min(max(p, 4), 30))
+
+
+def _lsh_pairs(
+    emb: DataFrame,
+    dim: int,
+    n_planes: int,
+    n_tables: int,
+    id_col: str,
+    max_bucket: int,
+) -> DataFrame:
+    """The one same-bucket cosine join: every pair sharing an LSH bucket
+    in any of ``n_tables`` tables, once. Buckets of more than
+    ``max_bucket`` vectors are dropped by blocking's ``cap_blocks``
+    first. Output: (vec_id_a, vec_id_b, cos) with vec_id_a < vec_id_b."""
+    # Persisted: `ids` (compact — id + bucket) encodes the expensive
+    # n_planes*n_tables hyperplane dot products and feeds the bucket
+    # cap plus BOTH self-join sides. The array-bearing `bucketed`
+    # table is deliberately NOT persisted: materializing the vector
+    # payload costs more than recomputing the parquet scan (A/B at
+    # sf0.1: 12.1 s persisted vs 7.8 s with ids-only vs 9.8 s with no
+    # persist). cache_scope() releases.
+    ids = scoped_persist(lsh_bucket_ids(emb, dim, n_planes, id_col, n_tables))
+    ids, _ = cap_blocks(ids, "bucket", id_col, max_bucket)
+    bucketed = _normed(emb, id_col).join(ids, id_col)
+    # TRIL: the dim-length dot-product fold is the hot expression of the
+    # self-join output and cosine is symmetric, so it runs once per
+    # unordered pair (vec_id_a < vec_id_b, the reference's triangle
+    # option as a join predicate, cuTWED.h:24-26 in the reference).
+    pairs = (
+        _side(bucketed, id_col, "vec_id_a", "a", "bucket")
+        .join(_side(bucketed, id_col, "vec_id_b", "b", "bucket"), "bucket")
+        .where(F.col("vec_id_a") < F.col("vec_id_b"))
+        .select("vec_id_a", "vec_id_b", _cos())
+    )
+    # a vector has one bucket per table, so with one table each pair
+    # meets once; across tables a pair may collide several times
+    return pairs.dropDuplicates(["vec_id_a", "vec_id_b"]) if n_tables > 1 else pairs
 
 
 def lsh_cosine_topk(
@@ -261,76 +314,19 @@ def lsh_cosine_topk(
     probability 1-(1-p)^L, at L x the join cost). Buckets of more than
     ``max_bucket`` vectors (hash-collision pile-ups / degenerate
     embeddings) are dropped before the self-join by blocking's
-    ``cap_blocks``, whose stats on ``lsh_bucket_ids`` output report the
-    drop. Vectors in a dropped bucket get no neighbors from that bucket
-    (recall cost, surfaced, never a 2^2*max_bucket^2 pair explosion).
-    """
-    from pyspark.sql.window import Window
+    ``cap_blocks``; the cap's stats are discarded. Vectors in a dropped
+    bucket get no neighbors from that bucket (a recall cost, never a
+    max_bucket^2 pair explosion).
 
-    e = with_double_embedding(emb).select(
-        F.col(id_col), "embedding", _norm(F.col("embedding")).alias("nrm")
+    The candidates are ``_lsh_pairs``' unordered pairs plus their
+    mirror by column swap.
+    """
+    tril = _lsh_pairs(emb, dim, n_planes, n_tables, id_col, max_bucket)
+    a, b = F.col("vec_id_a"), F.col("vec_id_b")
+    cand = tril.select(a.alias("vec_id"), b.alias("neighbor_id"), "cos").unionByName(
+        tril.select(b.alias("vec_id"), a.alias("neighbor_id"), "cos")
     )
-    # Persisted: `ids` (compact — id + bucket) encodes the expensive
-    # n_planes*n_tables hyperplane dot products and feeds the bucket
-    # cap plus BOTH self-join sides. The array-bearing `bucketed`
-    # table is deliberately NOT persisted: materializing the vector
-    # payload costs more than recomputing the parquet scan (A/B at
-    # sf0.1: 12.1 s persisted vs 7.8 s with ids-only vs 9.8 s with no
-    # persist). cache_scope() releases.
-    ids = scoped_persist(
-        lsh_bucket_ids(emb, dim, n_planes, id_col)
-        if n_tables == 1
-        else lsh_bucket_ids_multi(emb, dim, n_planes, n_tables, id_col)
-    )
-    ids, _ = cap_blocks(ids, "bucket", id_col, max_bucket)
-    bucketed = e.join(ids, id_col)
-    a = bucketed.select(
-        F.col("bucket"),
-        F.col(id_col).alias("vec_id"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = bucketed.select(
-        F.col("bucket"),
-        F.col(id_col).alias("neighbor_id"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    # TRIL + mirror: the dim-length dot-product fold is the hot
-    # expression of the self-join output, and cosine is symmetric — so
-    # compute it once per unordered pair (vec_id < neighbor_id, the
-    # reference's triangle option as a join predicate,
-    # /root/reference/src/cuTWED.h:24-26) and emit the mirrored row by
-    # column swap. Halves the fold work and the dedup input.
-    tril = (
-        a.join(b, "bucket")
-        .where(F.col("vec_id") < F.col("neighbor_id"))
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 4
-            ).alias("cos"),
-        )
-    )
-    if n_tables > 1:
-        # a pair colliding in several tables must rank once
-        tril = tril.dropDuplicates(["vec_id", "neighbor_id"])
-    cand = tril.unionByName(
-        tril.select(
-            F.col("neighbor_id").alias("vec_id"),
-            F.col("vec_id").alias("neighbor_id"),
-            "cos",
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cos", "rank")
-    )
+    return _topk(cand, k)
 
 
 def ivf_assignments(
@@ -345,11 +341,7 @@ def ivf_assignments(
     time. The centroid table is O(n_cells) and legitimately
     broadcastable; assignment is a narrow map over the broadcast, so
     this scales as one pass over the corpus."""
-    from pyspark.sql.window import Window
-
-    e = with_double_embedding(emb).select(
-        F.col(id_col), "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
+    e = _normed(emb, id_col)
     # orderBy().limit() compiles to a distributed TakeOrdered (no
     # global sort shuffle); the single-partition row_number window then
     # runs over only n_cells rows.
@@ -399,53 +391,26 @@ def ivf_cosine_topk(
     most neighbors from the home cell alone, so the probe fraction is
     the recall budget knob. n_cells should grow ~sqrt(n) at scale so
     cell lists stay O(sqrt(n))."""
-    from pyspark.sql.window import Window
-
     # Persisted: `assign` (compact — id + cell + rank) encodes the
     # centroid crossJoin + ranking window and feeds homes AND probes.
     # The array-bearing `e` is NOT persisted — caching vector payloads
     # loses to re-scanning parquet (A/B at sf0.1: 3.6 s with e persisted
     # vs 2.8 s assign-only vs 7.6 s no persist). cache_scope() releases.
     assign = scoped_persist(ivf_assignments(emb, n_cells, n_probe, id_col))
-    e = with_double_embedding(emb).select(
-        F.col(id_col), "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
+    e = _normed(emb, id_col)
     homes = assign.where(F.col("cell_rank") == 1).select(
         F.col(id_col).alias("neighbor_id"), "cell_id"
     )
     probes = assign.select(F.col(id_col).alias("vec_id"), "cell_id")
-    a = e.select(
-        F.col(id_col).alias("vec_id"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = e.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
     cand = (
         probes.join(homes, "cell_id")
         .where(F.col("vec_id") != F.col("neighbor_id"))
         .dropDuplicates(["vec_id", "neighbor_id"])
-        .join(a, "vec_id")
-        .join(b, "neighbor_id")
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 4
-            ).alias("cos"),
-        )
+        .join(_side(e, id_col, "vec_id", "a"), "vec_id")
+        .join(_side(e, id_col, "neighbor_id", "b"), "neighbor_id")
+        .select("vec_id", "neighbor_id", _cos())
     )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("vec_id", "neighbor_id", "cos", "rank")
-    )
+    return _topk(cand, k)
 
 
 def topk_neighbors(
@@ -503,39 +468,9 @@ def embedding_near_dup_pairs_lsh(
     only same-bucket pairs are compared (O(sum bucket^2), not O(n^2)).
     High-cosine pairs collide with probability (1 - theta/pi)^n_planes,
     so recall < 1 by design and rises as threshold -> 1; size n_planes
-    with ``suggest_n_planes`` and cap pathological buckets like
-    ``lsh_cosine_topk``. Output: (vec_id_a, vec_id_b, cos)."""
-    e = with_double_embedding(emb).select(
-        F.col(id_col), "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
-    # persist the compact bucket-id table (hyperplane dot products),
-    # never the array-bearing join — see lsh_cosine_topk's A/B note;
-    # cache_scope() releases
-    ids = scoped_persist(lsh_bucket_ids(emb, dim, n_planes, id_col))
-    ids, _ = cap_blocks(ids, "bucket", id_col, max_bucket)
-    bucketed = e.join(ids, id_col)
-    a = bucketed.select(
-        "bucket",
-        F.col(id_col).alias("vec_id_a"),
-        F.col("embedding").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = bucketed.select(
-        "bucket",
-        F.col(id_col).alias("vec_id_b"),
-        F.col("embedding").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    return (
-        a.join(b, "bucket")
-        .where(F.col("vec_id_a") < F.col("vec_id_b"))
-        .select(
-            "vec_id_a",
-            "vec_id_b",
-            F.round(
-                _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 4
-            ).alias("cos"),
-        )
-        .where(F.col("cos") >= threshold)
-        .dropDuplicates(["vec_id_a", "vec_id_b"])
-    )
+    with ``suggest_n_planes``. It is ``_lsh_pairs`` at one table, the
+    same capped same-bucket join as ``lsh_cosine_topk`` (buckets above
+    ``max_bucket`` are dropped, the cap's stats discarded), filtered to
+    cos >= threshold. Output: (vec_id_a, vec_id_b, cos)."""
+    pairs = _lsh_pairs(emb, dim, n_planes, 1, id_col, max_bucket)
+    return pairs.where(F.col("cos") >= threshold)

@@ -188,7 +188,6 @@ def run_incremental_dedup(
     band_size: int = 2,
     max_band: int = 64,
     min_jaccard: float = 0.5,
-    await_termination: bool = True,
 ):
     """Stream document parquet files from ``input_dir``; process
     available data and stop (availableNow trigger). Returns the query.
@@ -213,5 +212,4 @@ def run_incremental_dedup(
             max_band=max_band,
             min_jaccard=min_jaccard,
         ),
-        await_termination=await_termination,
     )

@@ -114,7 +114,6 @@ def _drain(
     work_dir: str,
     body,
     max_files_per_trigger: int | None = None,
-    await_termination: bool = True,
 ):
     """The one stream drain: parquet files of ``schema`` from
     ``input_dir``, each microbatch handed to ``body(batch_df)``,
@@ -131,8 +130,7 @@ def _drain(
         .trigger(availableNow=True)
         .start()
     )
-    if await_termination:
-        q.awaitTermination()
+    q.awaitTermination()
     return q
 
 
@@ -262,7 +260,6 @@ def run_incremental(
     work_dir: str,
     cfg: PipelineConfig | None = None,
     max_files_per_trigger: int | None = None,
-    await_termination: bool = True,
 ):
     """Stream transcript parquet files from ``input_dir``; process
     available data and stop (availableNow trigger). Returns the query.
@@ -276,7 +273,6 @@ def run_incremental(
         work_dir,
         lambda batch_df: _incremental_batch(spark, batch_df, cfg, p),
         max_files_per_trigger,
-        await_termination,
     )
 
 

@@ -20,6 +20,11 @@ SUBSET = [
     "dedup_minhash_lsh",
     "text_quality",
     "emb_cosine_topk",
+    "emb_lsh_buckets",
+    "emb_ann_topk",
+    "emb_topk_auto",
+    "emb_near_dup_lsh",
+    "emb_ivf_topk",
 ]
 
 

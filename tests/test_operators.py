@@ -354,12 +354,6 @@ def test_multimodal_decode(spark):
     assert sorted(map(str, out)) == sorted(map(str, again))
 
 
-def test_multimodal_real_codec_gate(spark):
-    media = synth_media(spark, n=3)
-    with pytest.raises(Exception, match="NotImplementedError|real media decode"):
-        decode_media(media, use_real_codec=True).collect()
-
-
 def test_multimodal_features_feed_similarity(spark):
     media = synth_media(spark, n=24)
     feats = extract_features(media).withColumnRenamed("media_id", "vec_id").withColumnRenamed("feature", "embedding")
@@ -385,10 +379,6 @@ def test_multimodal_resize(spark):
     for r in out:
         assert bytes(r["payload"]) == again[r["media_id"]]
         assert bytes(r["payload"])[:16] != other[r["media_id"]][:16]
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="NotImplementedError|real image resize"):
-        resize_images(media, use_real_codec=True).collect()
 
 
 def test_multimodal_frame_sampling(spark):
